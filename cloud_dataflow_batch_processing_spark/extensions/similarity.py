@@ -15,10 +15,10 @@ Engine-neutral determinism rules:
 Scale posture (100 TB / billions of vectors):
 - ``cosine_topk``: one broadcast of the query vector, per-row score,
   TakeOrderedAndProject — no shuffle of the corpus.
-- ``lsh_bucket``: per-row signature; candidate retrieval joins on the
-  bucket key only (shuffle of bucket-grouped candidates, not the
-  corpus cross product). Probing multiple tables → union of b bucket
-  keys, same plan shape as the dedup LSH join.
+- ``lsh_bucketed_pairs``: per-row signature; candidate verify is one
+  group-by on the bucket key (shuffle of bucket-grouped members, not
+  the corpus cross product), with each bucket's pairs scored in numpy
+  by ``_bucket_cosines``.
 """
 
 from __future__ import annotations
@@ -64,131 +64,60 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
-def cosine_fast(a: Column | str, b: Column | str) -> Column:
-    """Arrow-batched twin of :func:`cosine` — bit-identical binary64.
+# Doubles per tile array of _bucket_cosines: _argmin_arrow's
+# cache-resident tile (1024 rows × k=256).
+_COS_TILE = 1 << 18
 
-    The HOF fold is interpreted per element; at candidate-pair volume
-    (bucketed self-joins emit O(bucket²) pairs) it dominated
-    semantic_dedup_prune's profile: 12.0 s of 16.9 s at sf0.1 over
-    249k pairs (r11 measurement). Here each batch accumulates one dim
-    per step with elementwise binary64 ops (the `_argmin_arrow`
-    bit-identity argument: NOT np.sum / np.dot, whose pairwise or FMA
-    summation would re-associate the fold), so dot and both norms are
-    the same IEEE-754 operations in the same order as the
-    aggregate/zip_with fold, and the same DuckDB oracles certify
-    either path. NULL semantics preserved exactly: any NULL element,
-    a NULL array, zip length mismatch, or a zero norm product yields
-    SQL NULL (pandas nullable Float64 — never NaN, which Spark orders
-    ABOVE every number and would flip threshold filters). Callers
-    apply ``F.round`` on the JVM side — Spark's HALF_UP double
-    rounding must not be re-implemented in Python.
 
-    PRECONDITION (ADVICE r11 #2): inputs must be ``vec_is_valid``-
-    filtered, i.e. no NaN/Inf components. For NaN-BEARING vectors this
-    twin is NOT bit-identical to :func:`cosine`: Arrow serializes a
-    NULL array element and a NaN element to the same NaN, so the
-    has_null check cannot see them, and the Float64 masked-array
-    constructor maps a NaN result to SQL NULL where the HOF fold
-    yields NaN (which Spark orders above every number — a
-    ``cos_sim >= t`` filter keeps the HOF row but drops this one).
-    Exact NULL-element semantics are unattainable through Arrow;
-    every in-repo call site (lsh_bucketed_pairs, semantic_dedup_stats)
-    filters on vec_is_valid first, which excludes NaN vectors — keep
-    that discipline for new call sites.
-    """
+def _bucket_cosines(ids, vecs):
+    """Pairwise cosine over one bucket's members (int64 ``ids``, float64
+    ``vecs``). Yields ``(rows, cols, cos, pair)`` per row tile: member
+    indices, the cosine tile and the mask of its pairs — lower id in
+    ``cols``, equal lengths (the HOF ``zip_with`` pads a shorter side
+    with NULL, so such pairs drop) and a non-zero norm product. Each pair
+    appears once, in the row of its higher-id member. Rows are tiled so
+    a bucket of m members allocates O(_COS_TILE) doubles, never m × m.
+
+    Bit-identical to :func:`cosine`: dot and norms accumulate one dim
+    per step from 0.0 with elementwise binary64 ops (NOT np.sum /
+    np.dot, whose pairwise or FMA summation would re-associate the
+    fold), then divide by ``sqrt(na) * sqrt(nb)``, so the same DuckDB
+    oracles certify both. Callers round with ``F.round`` on the JVM:
+    Spark's HALF_UP double rounding must not be re-implemented here.
+
+    PRECONDITION: inputs are ``vec_is_valid``-filtered (no NULL, NaN or
+    Inf components), as every caller does. For NaN-bearing vectors this
+    is NOT bit-identical to :func:`cosine`: Arrow ships a NULL element
+    and a NaN element as the same NaN, and a NaN cosine returns to the
+    JVM as NULL where the HOF yields NaN (which Spark orders above every
+    number, so ``cos_sim >= t`` keeps the HOF row but not this one)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
-    def _cos(av, bv):  # no hints: returnType given; local-pd hints don't resolve
-        n = len(av)
-        out = np.empty(n, dtype=np.float64)
-        mask = np.zeros(n, dtype=bool)  # True -> SQL NULL
-        lens_a = np.array([-1 if x is None else len(x) for x in av])
-        lens_b = np.array([-1 if x is None else len(x) for x in bv])
-        rect = (
-            n > 0
-            and lens_a.min() == lens_a.max() == lens_b.min() == lens_b.max()
-            and lens_a[0] >= 0
-        )
-
-        def has_null(x) -> bool:
-            arr = np.asarray(x, dtype=object)
-            return any(v is None for v in arr)
-
-        if rect:
-            try:
-                # One C-level concatenate instead of a per-row python
-                # loop (r12): 3.2× on the conversion, which at pair-
-                # verify volume (1M pairs × two 64-dim vectors per
-                # batch row) was a measured ~0.25 s per 10k-row batch
-                # side. Same values, same dtype (inputs are already
-                # float64 from the JVM-side cast).
-                dim0 = int(lens_a[0])
-                if dim0:
-                    xa = np.concatenate(av.to_numpy()).astype(
-                        np.float64, copy=False
-                    ).reshape(n, dim0)
-                    xb = np.concatenate(bv.to_numpy()).astype(
-                        np.float64, copy=False
-                    ).reshape(n, dim0)
-                else:
-                    xa = np.empty((n, 0))
-                    xb = np.empty((n, 0))
-            except (TypeError, ValueError):
-                rect = False
-        if rect:
-            dim = xa.shape[1]
-            d_acc = np.zeros(n, dtype=np.float64)
-            na_acc = np.zeros(n, dtype=np.float64)
-            nb_acc = np.zeros(n, dtype=np.float64)
-            # out= buffer reuse (r12, same finding as _argmin_arrow):
-            # identical IEEE ops in identical order, no per-dim
-            # allocations.
-            tmp = np.empty(n, dtype=np.float64)
+    lens = np.fromiter((len(v) for v in vecs), dtype=np.int64, count=len(vecs))
+    for dim in np.unique(lens):
+        idx = np.flatnonzero(lens == dim)
+        if len(idx) < 2:
+            continue
+        idx = idx[np.argsort(ids[idx], kind="stable")]
+        m, sid = len(idx), ids[idx]
+        # dim-major copy: each step of the folds reads one contiguous row.
+        xt = np.stack([vecs[i] for i in idx], axis=1)
+        sq = np.zeros(m)
+        for d in range(dim):
+            sq += xt[d] * xt[d]
+        nrm = np.sqrt(sq)
+        block = max(1, _COS_TILE // m)
+        for r0 in range(1, m, block):
+            r1 = min(r0 + block, m)
+            acc = np.zeros((r1 - r0, r1))
+            tmp = np.empty_like(acc)
             for d in range(dim):
-                np.multiply(xa[:, d], xb[:, d], out=tmp)
-                np.add(d_acc, tmp, out=d_acc)
-                np.multiply(xa[:, d], xa[:, d], out=tmp)
-                np.add(na_acc, tmp, out=na_acc)
-                np.multiply(xb[:, d], xb[:, d], out=tmp)
-                np.add(nb_acc, tmp, out=nb_acc)
-            den = np.sqrt(na_acc) * np.sqrt(nb_acc)
-            zero = den == 0.0
-            out = np.divide(d_acc, den, out=np.zeros_like(d_acc), where=~zero)
-            mask = zero
-        else:
-            # Ragged / NULL-bearing batch: per-row fold with the exact
-            # zip_with padding semantics (shorter side pads NULL →
-            # product NULL → dot NULL → cosine NULL).
-            for i in range(n):
-                a_i, b_i = av.iloc[i], bv.iloc[i]
-                if a_i is None or b_i is None or len(a_i) != len(b_i) \
-                        or has_null(a_i) or has_null(b_i):
-                    mask[i] = True
-                    continue
-                dot_v = 0.0
-                na_v = 0.0
-                nb_v = 0.0
-                for x, y in zip(a_i, b_i):
-                    dot_v = dot_v + float(x) * float(y)
-                for x in a_i:
-                    na_v = na_v + float(x) * float(x)
-                for y in b_i:
-                    nb_v = nb_v + float(y) * float(y)
-                den_v = (na_v ** 0.5) * (nb_v ** 0.5)
-                if den_v == 0.0:
-                    mask[i] = True
-                else:
-                    out[i] = dot_v / den_v
-        res = pd.array(out, dtype="Float64")
-        res[mask] = pd.NA
-        return pd.Series(res, dtype="Float64")
-
-    ac = F.col(a) if isinstance(a, str) else a
-    bc = F.col(b) if isinstance(b, str) else b
-    return _cos(_as_double(ac), _as_double(bc))
+                np.multiply(xt[d, r0:r1, None], xt[d, None, :r1], out=tmp)
+                np.add(acc, tmp, out=acc)
+            den = nrm[r0:r1, None] * nrm[None, :r1]
+            nz = den != 0.0
+            np.divide(acc, den, out=acc, where=nz)
+            yield idx[r0:r1], idx[:r1], acc, nz & (sid[None, :r1] < sid[r0:r1, None])
 
 
 def vec_is_valid(col: Column | str) -> Column:
@@ -250,6 +179,36 @@ def lsh_signature(vec_col: Column | str, num_planes: int = NUM_PLANES) -> Column
     return total
 
 
+def _cluster_drops(asg: DataFrame, min_cosine: float) -> DataFrame:
+    """Per cluster of a vec_is_valid-filtered (__id, __e, cid) frame:
+    (cid, n_members, n_dropped, n_kept), where a member is dropped iff a
+    lower-id member of its cluster has ``round(cosine, 6) >= min_cosine``.
+    The grouped body emits one row per member, (cid, max cosine to any
+    lower-id member); rounding is monotone, so round(max) = max(round)."""
+    import numpy as np
+    import pandas as pd
+
+    def _cos(pdf):
+        ids = pdf["__id"].to_numpy(np.int64)
+        # NaN (no lower-id partner) ships to the JVM as NULL.
+        mx = np.full(len(ids), np.nan)
+        for rows, _cols, c, pair in _bucket_cosines(ids, list(pdf["__e"])):
+            has = pair.any(axis=1)
+            mx[rows[has]] = np.where(pair, c, -np.inf).max(axis=1)[has]
+        return pd.DataFrame({"cid": pdf["cid"], "cos_max": mx})
+
+    return (
+        asg.groupBy("cid")
+        .applyInPandas(_cos, "cid long, cos_max double")
+        .groupBy("cid")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.count(F.when(F.round("cos_max", 6) >= min_cosine, 1)).alias("n_dropped"),
+        )
+        .withColumn("n_kept", F.col("n_members") - F.col("n_dropped"))
+    )
+
+
 def lsh_bucketed_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -258,32 +217,37 @@ def lsh_bucketed_pairs(
     num_planes: int = NUM_PLANES,
 ) -> DataFrame:
     """ANN near-pair retrieval: bucket by hyperplane signature, exact
-    cosine verify within buckets only. The signature frame is cached
-    (managed, released by the caller's boundary) so the self-join scans
-    the 8-plane × 64-dim fold once per row instead of once per side —
-    same treatment as the minhash/simhash pipelines
-    (extensions/dedup.py)."""
-    from cloud_dataflow_batch_processing_spark.caching import managed_cache
+    cosine verify within buckets only — one group-by on the bucket
+    (Beam's GroupByKey + per-key DoFn) that ships each bucket's member
+    matrix once, so the 8-plane × 64-dim signature fold runs once per
+    row with no cache and no self-join. Returns (id_a, id_b, cos_sim)
+    for every same-bucket pair id_a < id_b with cos_sim ≥ ``min_cosine``."""
+    import numpy as np
+    import pandas as pd
 
-    sig = managed_cache(
-        df.filter(vec_is_valid(vec_col)).select(
-            F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
+    # Conservative pre-filter: every pair with round(cos, 6) >= min_cosine
+    # has cos >= min_cosine - 5e-7; the exact rounding and threshold run
+    # on the JVM below.
+    floor = min_cosine - 1e-6
+
+    def _cos(pdf):
+        ids = pdf["__id"].to_numpy(np.int64)
+        out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+        for rows, cols, c, pair in _bucket_cosines(ids, list(pdf["__v"])):
+            hi, lo = np.nonzero(pair & (c >= floor))
+            out.append((ids[cols[lo]], ids[rows[hi]], c[hi, lo]))
+        id_a, id_b, cos = map(np.concatenate, zip(*out))
+        return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cos_sim": cos})
+
+    return (
+        df.filter(vec_is_valid(vec_col))
+        .select(
+            F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"),
             lsh_signature(vec_col, num_planes).alias("bucket"),
         )
-    )
-    a, b = sig.alias("a"), sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            # Arrow-batched pair verify (bit-identical, see cosine_fast)
-            # — same O(bucket²) argument as semantic_dedup_stats.
-            F.round(cosine_fast(F.col("a.__v"), F.col("b.__v")), 6).alias("cos_sim"),
-        )
+        .groupBy("bucket")
+        .applyInPandas(_cos, "id_a long, id_b long, cos_sim double")
+        .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= min_cosine)
     )
 
@@ -680,8 +644,8 @@ def _argmin_arrow(cent_rows: list[tuple[int, list[float]]]) -> Column:
             return pd.DataFrame({"d2": pd.Series(dtype="float64"),
                                  "cid": pd.Series(dtype="int64")})
         # One C-level concatenate instead of a per-row python loop
-        # (r12, same finding as cosine_fast): the input is rectangular
-        # by contract (vec_is_valid-filtered embeddings of one dim).
+        # (r12): the input is rectangular by contract
+        # (vec_is_valid-filtered embeddings of one dim).
         dim0 = mat_.shape[1]
         x = np.concatenate(e.to_numpy()).astype(np.float64, copy=False).reshape(
             len(e), dim0
@@ -765,15 +729,12 @@ def semantic_dedup_stats(
     higher id of every pair. Returns per-cluster
     (cid, n_members, n_dropped, n_kept).
 
-    Scale posture: clustering bounds the quadratic work — the pair
-    join's key is the cluster id, so candidate generation is a bucketed
-    self-join exactly like the LSH pipelines, never an all-pairs
-    product. At corpus scale k grows with the data (SemDeDup uses
-    10k–100k clusters) to keep each bucket's pair count bounded; the
-    assignment stage stays per-row/zero-shuffle regardless of k. The
-    assigned frame is managed-cached so the self-join's two sides scan
-    one materialization of the per-row argmin."""
-    from cloud_dataflow_batch_processing_spark.caching import managed_cache
+    Scale posture: clustering bounds the quadratic work — one group-by
+    on the cluster id ships each cluster's member matrix once
+    (:func:`_cluster_drops`), never an all-pairs product. At corpus
+    scale k grows with the data (SemDeDup uses 10k–100k clusters) to
+    keep each cluster's pair count bounded; the assignment stage stays
+    per-row/zero-shuffle regardless of k."""
     from cloud_dataflow_batch_processing_spark.plans.inspect import fan_out_scan
 
     v = df.filter(vec_is_valid(vec_col)).select(
@@ -782,36 +743,8 @@ def semantic_dedup_stats(
     # Size-gated scan fan-out — see kmeans_assign.
     v = fan_out_scan(v, "__id", min_bytes=FAN_OUT_MIN_BYTES)
     cent_rows = kmeans_centroids(v, k, iters, assign_method)
-    asg = managed_cache(
-        v.select("__id", "__e", _argmin_col(cent_rows, assign_method)["cid"].alias("cid"))
-    )
-    a, b = asg.alias("a"), asg.alias("b")
-    pairs = a.join(
-        b, (F.col("a.cid") == F.col("b.cid")) & (F.col("a.__id") < F.col("b.__id"))
-    ).select(
-        F.col("a.cid").alias("cid"),
-        F.col("b.__id").alias("id_b"),
-        # Arrow-batched cosine (bit-identical to the HOF fold — see
-        # cosine_fast): the verify stage evaluates O(bucket²) pairs and
-        # the interpreted HOF was 12.0 of 16.9 s at sf0.1 (guide §4).
-        F.round(cosine_fast(F.col("a.__e"), F.col("b.__e")), 6).alias("cos_sim"),
-    )
-    dropped = (
-        pairs.filter(F.col("cos_sim") >= min_cosine)
-        .select("cid", "id_b")
-        .distinct()
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("n_dropped"))
-    )
-    members = asg.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
-    return members.join(dropped, "cid", "left").select(
-        "cid",
-        "n_members",
-        F.coalesce(F.col("n_dropped"), F.lit(0)).cast("long").alias("n_dropped"),
-        (F.col("n_members") - F.coalesce(F.col("n_dropped"), F.lit(0)))
-        .cast("long")
-        .alias("n_kept"),
-    )
+    asg = v.select("__id", "__e", _argmin_col(cent_rows, assign_method)["cid"].alias("cid"))
+    return _cluster_drops(asg, min_cosine)
 
 
 def sqdist_sql(a: str, b: str) -> str:

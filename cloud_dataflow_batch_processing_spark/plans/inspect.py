@@ -181,7 +181,8 @@ def fan_out_scan(df: DataFrame, key_col: str, min_bytes: int | None = None) -> D
         # large enough for the vectorized kernel to amortize worker
         # overhead. Bounded by the core count.
         n_target = min(n_target, max(2, est // max(min_bytes // 4, 1)))
-    if df.rdd.getNumPartitions() < n_target:
+    # JVM-side count: df.rdd would build a Python-RDD plan per call.
+    if df._jdf.rdd().getNumPartitions() < n_target:
         return df.repartition(n_target, F.col(key_col))
     return df
 

@@ -147,8 +147,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets prune candidates, exact cosine >= 0.9 marks near-dups, the
     higher vec_id of each pair is dropped, and the kept corpus is
     profiled per language. embeddings.vec_id aligns 1:1 with
-    documents.doc_id in the test data. Scale posture: bucket-key join
-    only (no all-pairs), anti-join on the dropped side."""
+    documents.doc_id in the test data. Scale posture: one group-by on
+    the bucket key (no all-pairs), anti-join on the dropped side."""
     t = load_tables(spark, sf_dir)
     pairs = S.lsh_bucketed_pairs(t["embeddings"], min_cosine=0.9)
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
@@ -262,9 +262,9 @@ def semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: cluster with deterministic
     k-means, then drop the higher id of every within-cluster pair with
     cosine ≥ 0.9; reported per cluster as (n_members, n_dropped,
-    n_kept). Candidate generation is bucketed by cluster id — the same
-    bounded-bucket self-join shape as the LSH pipelines, never
-    all-pairs. assign_method="arrow": bit-identical to the literal-
+    n_kept). The pair verify is one group-by on the cluster id, the
+    same grouped kernel as the LSH pipelines, never all-pairs.
+    assign_method="arrow": bit-identical to the literal-
     expression path (the semantic_kmeans_assign / _arrow twin pair
     certifies both against ONE oracle) and the SemDeDup-realistic
     posture (k grows to 10k-100k clusters, where the literal plan is

@@ -5,13 +5,16 @@ tests/test_window_rotation.py fails the suite when the window overlaps
 the latest CORRECTNESS_r*.json by more than 25 names. Every round MUST
 therefore open by rotating. This script makes that mechanical:
 
-- never-driver-certified names first (alphabetical),
+- names given on the command line first, in the order given — the
+  queries the round touches, so the correctness gate certifies their
+  changed plans in the same round,
+- then never-certified names (alphabetical),
 - then by least-recent certification round (ties alphabetical),
 - greedily capped so overlap with the LATEST correctness file stays
   <= 25 (skipped names fall to the next round).
 
-    python scripts/rotate_window.py            # print the tuple + stats
-    python scripts/rotate_window.py --write    # splice it into queries.py
+    python scripts/rotate_window.py [NAME ...]            # print the tuple + stats
+    python scripts/rotate_window.py --write [NAME ...]    # splice it into queries.py
 
 After --write, rerun `pytest tests/test_window_rotation.py
 tests/test_oracle_parity.py -q` and hand-edit the rotation comment
@@ -49,14 +52,18 @@ def last_certified() -> tuple[dict[str, int], set[str], str]:
     return latest, set(json.loads(newest.read_text())), newest.name
 
 
-def propose() -> tuple[list[str], dict]:
+def propose(touched: list[str]) -> tuple[list[str], dict]:
     sys.path.insert(0, str(REPO))
     from cloud_dataflow_batch_processing_spark import queries as q
 
     q._load_submodule_registries()
     names = sorted(q.REGISTRY)
+    unknown = [n for n in touched if n not in q.REGISTRY]
+    if unknown:
+        raise SystemExit(f"not registered: {unknown}")
     certs, newest_names, newest_file = last_certified()
-    ranked = sorted(names, key=lambda n: (certs.get(n, -1), n))
+    rest = sorted(set(names) - set(touched), key=lambda n: (certs.get(n, -1), n))
+    ranked = list(dict.fromkeys(touched)) + rest
     window: list[str] = []
     overlap = 0
     deferred: list[str] = []
@@ -71,6 +78,7 @@ def propose() -> tuple[list[str], dict]:
         window.append(n)
     stats = {
         "newest_file": newest_file,
+        "touched": [n for n in window if n in touched],
         "overlap_with_newest": overlap,
         "never_certified": [n for n in window if n not in certs],
         "deferred_for_overlap": deferred[:10],
@@ -79,7 +87,7 @@ def propose() -> tuple[list[str], dict]:
 
 
 def main() -> None:
-    window, stats = propose()
+    window, stats = propose([a for a in sys.argv[1:] if a != "--write"])
     body = "\n".join(f'    "{n}",' for n in window)
     tuple_src = f"DRIVER_WINDOW: tuple[str, ...] = (\n{body}\n)"
     if "--write" in sys.argv:

@@ -170,21 +170,42 @@ def test_ivf_partition_pruning(spark, tables, tmp_path):
     ]
 
 
-def test_lsh_pairs_signature_cached_both_sides(spark, sf_dir):
-    """lsh_bucketed_pairs self-joins its signature frame; the 8-plane ×
-    64-dim fold must be computed ONCE per row and served from cache on
-    BOTH join sides (InMemoryTableScan ×2), not recomputed per side —
-    at 100 TB the fold dominates the query (VERDICT r2 #3)."""
-    from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
-    from cloud_dataflow_batch_processing_spark.plans import executed_plan
+def test_lsh_pairs_signature_computed_once(spark, sf_dir):
+    """lsh_bucketed_pairs verifies each bucket in ONE grouped pass: the
+    8-plane × 64-dim signature fold must be computed once per row and
+    never re-derived for a second join side — at 100 TB the fold
+    dominates the query (VERDICT r2 #3)."""
+    from cloud_dataflow_batch_processing_spark.extensions.similarity import LCG_A
+    from cloud_dataflow_batch_processing_spark.plans import count_plan_nodes
+    from cloud_dataflow_batch_processing_spark.plans.inspect import iter_plan_nodes
 
     df = REGISTRY["ann_lsh_pairs"].fn(spark, sf_dir)
-    try:
-        df.count()  # populate the cache so the executed plan resolves it
-        plan = executed_plan(df)
-        assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
-    finally:
-        release_managed_caches()
+    assert count_plan_nodes(df, "FlatMapGroupsInPandas") == 1
+    joins = ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+             "BroadcastNestedLoopJoin", "CartesianProduct")
+    assert count_plan_nodes(df, *joins) == 0
+    sig_projects = {
+        n.id() for n in iter_plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "Project" and str(LCG_A) in n.simpleString(10_000)
+    }
+    assert len(sig_projects) == 1
+
+
+def test_fan_out_scan_size_gate(spark, tmp_path):
+    """fan_out_scan(min_bytes=) is a no-op below the optimizer's size
+    estimate gate and hash-repartitions a single-split scan above it."""
+    from cloud_dataflow_batch_processing_spark.plans import fan_out_scan
+
+    path = str(tmp_path / "one_split")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert fan_out_scan(df, "id", min_bytes=est + 1) is df
+    fanned = fan_out_scan(df, "id", min_bytes=est)
+    assert fanned is not df
+    assert fanned.rdd.getNumPartitions() == min(4, spark.sparkContext.defaultParallelism)
+    assert count_shuffles(fanned) == 1
 
 
 def test_avro_fallback_read_plan(spark, tmp_path):
