@@ -160,10 +160,9 @@ def scale_bench(spark) -> dict:
 
 def _kmeans_scale_point(spark) -> dict:
     """Round-4 headline fix at realistic scale: one Lloyd round +
-    final assignment at k=256 over 50k x 64-dim vectors — auto
-    dispatch lands on the broadcast-matrix Arrow argmin (the literal
-    path would inline ~16k literals and choke analysis long before
-    SemDeDup-realistic k). Correctness at scale: a 2000-row sample of
+    final assignment at k=256 over 50k x 64-dim vectors through the
+    broadcast-matrix Arrow argmin (plan size O(1) in k, so it holds up
+    to SemDeDup-realistic k). Correctness at scale: a 2000-row sample of
     the Spark assignment is re-derived with an independent numpy
     argmin against the SAME trained centroids — exact cid equality."""
     import numpy as np
@@ -186,7 +185,7 @@ def _kmeans_scale_point(spark) -> dict:
     cents = S.kmeans_centroids(v, k=k, iters=1)
     t_train = time.perf_counter() - t0
     t0 = time.perf_counter()
-    asg = v.select("__id", S._argmin_col(cents)["cid"].alias("cid"))
+    asg = v.select("__id", S._argmin_arrow(cents)["cid"].alias("cid"))
     asg.write.format("noop").mode("overwrite").save()
     t_assign = time.perf_counter() - t0
 
@@ -316,9 +315,7 @@ def heavy_bench(spark) -> dict:
     emb20k = spark.read.parquet(epath).filter("vec_id < 20000")
     timed(
         "semantic_dedup_prune_k256",
-        lambda: S.semantic_dedup_stats(
-            emb20k, k=256, iters=2, min_cosine=0.9, assign_method="arrow"
-        ),
+        lambda: S.semantic_dedup_stats(emb20k, k=256, iters=2, min_cosine=0.9),
     )
     timed("vcf_variants_agg_10x", lambda: vcf_variants_report(spark, hdir, n_records=40_000))
     return entries

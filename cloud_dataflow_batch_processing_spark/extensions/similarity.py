@@ -325,11 +325,9 @@ def ivf_build_index(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_method: str = "auto",
 ) -> None:
-    """Build a persisted IVF index: train deterministic Lloyd k-means
-    (auto-dispatching to the broadcast-matrix Arrow argmin above
-    ``ARROW_ASSIGN_K``), assign every vector, and write
+    """Build a persisted IVF index: train deterministic Lloyd k-means,
+    assign every vector with the broadcast-matrix argmin, and write
 
     - ``{out_dir}/vectors``   — the corpus partitioned BY CLUSTER ID
       (``partitionBy("cid")``), so a search's ``cid IN (probes)``
@@ -348,11 +346,11 @@ def ivf_build_index(
     v = df.filter(vec_is_valid(vec_col)).select(
         F.col(id_col).alias("__id"), _as_double(vec_col).alias("__e")
     )
-    cent_rows = kmeans_centroids(v, k, iters, assign_method)
+    cent_rows = kmeans_centroids(v, k, iters)
     asg = v.select(
         F.col("__id").alias(id_col),
         F.col("__e").alias(vec_col),
-        _argmin_col(cent_rows, assign_method)["cid"].alias("cid"),
+        _argmin_arrow(cent_rows)["cid"].alias("cid"),
     )
     asg.write.mode("overwrite").partitionBy("cid").parquet(
         os.path.join(out_dir, "vectors")
@@ -379,7 +377,6 @@ def ivf_index_append(
     index_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_method: str = "auto",
 ) -> None:
     """Incremental index maintenance: assign a NEW batch of vectors
     against the index's STORED centroids (no retraining, no touch of
@@ -387,8 +384,10 @@ def ivf_index_append(
     the daily-increment shape, mirroring ``incremental_near_dups`` for
     the dedup family. The old corpus contributes nothing but its
     directory structure; the append is one partitioned write of the
-    batch. Centroids drift as the corpus grows — periodic rebuilds
-    (``ivf_build_index``) re-center, exactly like any production IVF."""
+    batch. Like the build, the batch is ``vec_is_valid``-filtered: a
+    NULL, NaN-bearing or zero vector is never indexed. Centroids drift
+    as the corpus grows — periodic rebuilds (``ivf_build_index``)
+    re-center, exactly like any production IVF."""
     import os
 
     spark = df.sparkSession
@@ -396,11 +395,13 @@ def ivf_index_append(
         (int(r["cid"]), [float(x) for x in r["cv"]])
         for r in spark.read.parquet(os.path.join(index_dir, "centroids")).collect()
     ]
-    v = df.select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__e"))
+    v = df.filter(vec_is_valid(vec_col)).select(
+        F.col(id_col).alias("__id"), _as_double(vec_col).alias("__e")
+    )
     asg = v.select(
         F.col("__id").alias(id_col),
         F.col("__e").alias(vec_col),
-        _argmin_col(cent_rows, assign_method)["cid"].alias("cid"),
+        _argmin_arrow(cent_rows)["cid"].alias("cid"),
     )
     asg.write.mode("append").partitionBy("cid").parquet(
         os.path.join(index_dir, "vectors")
@@ -501,32 +502,12 @@ def lsh_signature_sql(vec: str, num_planes: int = NUM_PLANES) -> str:
 # ---------------------------------------------------------------------------
 
 
-def sqdist(a: Column | str, b: Column | str) -> Column:
-    """Strict left-to-right squared Euclidean distance (matches the
-    DuckDB list_reduce twin bit-for-bit)."""
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-# Above this k the per-row argmin switches from inlined literal-centroid
-# expressions to an Arrow-batched numpy argmin over a broadcast k×dim
-# matrix: the literal plan carries k×dim literals, which is fine at k=8
-# but kills analysis/codegen at SemDeDup-realistic k (10k–100k clusters).
-# Both paths are bit-identical binary64 (see _argmin_arrow) so the same
-# full-trajectory oracle certifies either.
-ARROW_ASSIGN_K = 64
-
-
 def kmeans_assign(
     df: DataFrame,
     k: int = 8,
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_method: str = "auto",
 ) -> DataFrame:
     """Deterministic Lloyd k-means: centroids seeded from the k lowest
     ids, ``iters`` (assign → decimal-exact centroid update) rounds,
@@ -541,20 +522,29 @@ def kmeans_assign(
     Scale posture (billions of vectors — the MLlib KMeans shape):
     centroids are MATERIALIZED driver-side after each update (k × dim
     doubles — the same tiny collect every k-means implementation makes)
-    and re-embedded as literals, so each assignment is a pure per-row
-    expression: the corpus NEVER shuffles and never joins. Per
-    iteration the only exchange carries (cid, pos) partial sums — at
-    most k × dim rows per map task after partial aggregation — and the
-    final returned plan is scan → per-row argmin, zero exchanges.
-    Python round-trip of the centroid doubles is exact (binary64), so
-    materialization cannot perturb the trajectory.
+    and re-shipped as one broadcast matrix, so each assignment is a
+    per-row Arrow-batched argmin (:func:`_argmin_arrow`, plan size O(1)
+    in k): the corpus NEVER shuffles and never joins. Per iteration the
+    only exchange carries (cid, pos) partial sums — at most k × dim
+    rows per map task after partial aggregation — and the final
+    returned plan is scan → per-row argmin, zero exchanges. Python
+    round-trip of the centroid doubles is exact (binary64), so
+    materialization cannot perturb the trajectory."""
+    asg = _kmeans_fit_assign(df, k, iters, id_col, vec_col)
+    return asg.select(
+        F.col("__id").alias(id_col),
+        F.col("__b")["cid"].alias("cid"),
+        F.round(F.sqrt(F.col("__b")["d2"]), 6).alias("dist"),
+    )
 
-    ``assign_method``: ``"expr"`` inlines the centroids as literal
-    expressions (zero-exchange codegen — best at small k), ``"arrow"``
-    ships them once as a broadcast k×dim matrix and assigns via an
-    Arrow-batched numpy argmin (bounded plan size — required at large
-    k), ``"auto"`` picks arrow above ``ARROW_ASSIGN_K``. Both are
-    bit-identical binary64, so results never depend on the choice."""
+
+def _kmeans_fit_assign(
+    df: DataFrame, k: int, iters: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The k-means stage shared by ``kmeans_assign`` and
+    ``semantic_dedup_stats``: ``vec_is_valid``-filter and cast the
+    corpus, fan the scan out, train, then assign. Returns (__id, __e,
+    __b) with ``__b`` the nearest centroid's (d2, cid) struct."""
     from cloud_dataflow_batch_processing_spark.plans.inspect import fan_out_scan
 
     v = df.filter(vec_is_valid(vec_col)).select(
@@ -566,60 +556,32 @@ def kmeans_assign(
     # run); below the gate the exchange costs more than the serial
     # pass (2-3x regression measured at sf0.1). No-op at real scale.
     v = fan_out_scan(v, "__id", min_bytes=FAN_OUT_MIN_BYTES)
-    cent_rows = kmeans_centroids(v, k, iters, assign_method)
-    staged = v.select(
-        F.col("__id").alias(id_col), _argmin_col(cent_rows, assign_method).alias("__b")
-    )
-    return staged.select(
-        id_col,
-        F.col("__b")["cid"].alias("cid"),
-        F.round(F.sqrt(F.col("__b")["d2"]), 6).alias("dist"),
-    )
-
-
-def _argmin_expr(cent_rows: list[tuple[int, list[float]]]) -> Column:
-    """Per-row argmin over literal centroids: min (d2, cid) struct
-    against the ``__e`` column."""
-    cands = F.array(
-        *[
-            F.struct(
-                sqdist(F.col("__e"), F.array(*[F.lit(float(x)) for x in cv])).alias(
-                    "d2"
-                ),
-                F.lit(int(cid)).cast("long").alias("cid"),
-            )
-            for cid, cv in sorted(cent_rows)
-        ]
-    )
-    return F.array_min(cands)
-
-
-def _argmin_col(
-    cent_rows: list[tuple[int, list[float]]], method: str = "auto"
-) -> Column:
-    """Dispatch the per-row nearest-centroid argmin: literal expressions
-    at small k, broadcast-matrix Arrow argmin above ``ARROW_ASSIGN_K``
-    (plan size stays O(1) in k instead of O(k×dim) literals)."""
-    if method == "expr" or (method == "auto" and len(cent_rows) <= ARROW_ASSIGN_K):
-        return _argmin_expr(cent_rows)
-    if method not in ("arrow", "auto"):
-        raise ValueError(f"assign_method must be auto|expr|arrow, got {method!r}")
-    return _argmin_arrow(cent_rows)
+    cent_rows = kmeans_centroids(v, k, iters)
+    return v.select("__id", "__e", _argmin_arrow(cent_rows).alias("__b"))
 
 
 def _argmin_arrow(cent_rows: list[tuple[int, list[float]]]) -> Column:
-    """Arrow-batched nearest-centroid argmin over a broadcast k×dim
-    numpy matrix — the scale path for SemDeDup-realistic k (10k–100k),
-    where inlining k×dim literals would kill the planner.
+    """Per-row nearest-centroid argmin of the ``__e`` column, as a
+    (d2, cid) struct. The centroids ship once as a broadcast k×dim
+    numpy matrix and each Arrow batch is assigned by a numpy kernel, so
+    the plan stays O(1) in k — SemDeDup-realistic k (10k–100k) would
+    kill the planner if k×dim centroids were inlined as literals.
 
-    Bit-identity with ``_argmin_expr``: the literal path folds
-    ``acc = acc + (x_d - c_d)²`` strictly left-to-right over dims from
-    acc=0.0; here the numpy loop accumulates one dim per step with
-    elementwise binary64 ops (NOT np.sum, whose pairwise summation
-    would re-associate the fold), so every intermediate is the same
-    IEEE-754 operation in the same order. Ties break to the lower cid
-    in both: array_min on (d2, cid) structs ↔ np.argmin's
-    first-occurrence over centroids pre-sorted by cid.
+    Bit-identity with the DuckDB oracle (``sqdist_sql`` inside
+    ``kmeans_assign_sql`` and ``semantic_dedup_sql``): the SQL twin
+    folds ``acc + (x_d - c_d) * (x_d - c_d)`` strictly left-to-right
+    over dims from acc = 0.0; here the loop accumulates one dim per
+    step with elementwise binary64 subtract, multiply and add (NOT
+    np.sum / np.dot, whose pairwise or FMA summation would re-associate
+    the fold), so every intermediate is the same IEEE-754 operation in
+    the same order. Ties break to the lower cid in both: ``ORDER BY d2,
+    cid`` ↔ np.argmin's first occurrence over centroids pre-sorted by
+    cid. That op order is why the oracle certifies this kernel row for
+    row.
+
+    Every row must have the centroids' dimension; any other length
+    raises ``ValueError`` naming both. Callers ``vec_is_valid``-filter
+    first, so NULL, NaN-bearing and zero vectors never arrive.
 
     Memory bound: the broadcast is k×dim float64 (~600 MB at
     SemDeDup's k=100k × dim=768) — the same driver/executor-resident
@@ -643,10 +605,16 @@ def _argmin_arrow(cent_rows: list[tuple[int, list[float]]]) -> Column:
         if len(e) == 0:
             return pd.DataFrame({"d2": pd.Series(dtype="float64"),
                                  "cid": pd.Series(dtype="int64")})
-        # One C-level concatenate instead of a per-row python loop
-        # (r12): the input is rectangular by contract
-        # (vec_is_valid-filtered embeddings of one dim).
         dim0 = mat_.shape[1]
+        lens = np.fromiter((len(r) for r in e), dtype=np.int64, count=len(e))
+        bad = np.flatnonzero(lens != dim0)
+        if len(bad):
+            raise ValueError(
+                f"k-means assignment expects vectors of dim {dim0} (the "
+                f"centroids'), found dim {lens[bad[0]]}"
+            )
+        # One C-level concatenate instead of a per-row python loop
+        # (r12); the lengths above make the flat buffer rectangular.
         x = np.concatenate(e.to_numpy()).astype(np.float64, copy=False).reshape(
             len(e), dim0
         )
@@ -683,9 +651,7 @@ def _argmin_arrow(cent_rows: list[tuple[int, list[float]]]) -> Column:
     return _assign(F.col("__e"))
 
 
-def kmeans_centroids(
-    v: DataFrame, k: int, iters: int, assign_method: str = "auto"
-) -> list[tuple[int, list[float]]]:
+def kmeans_centroids(v: DataFrame, k: int, iters: int) -> list[tuple[int, list[float]]]:
     """Run the Lloyd iterations over a (__id, __e) frame and return the
     final centroids as driver-side (cid, components) rows."""
     # Seeds = the k LOWEST ids (not `id < k`): identical on dense
@@ -699,14 +665,12 @@ def kmeans_centroids(
         .collect()
     ]
     if not cent_rows:
-        # An empty corpus cannot seed any centroid; the downstream
-        # literal array would be an untyped array() and die at analysis
-        # with an opaque INVALID_EXTRACT_BASE_FIELD_TYPE — refuse here.
+        # An empty corpus cannot seed any centroid, and the argmin over
+        # an empty centroid matrix would die opaquely inside a Python
+        # worker — refuse here.
         raise ValueError("k-means needs a non-empty corpus to seed centroids")
     for _ in range(iters):
-        assigned = v.select(
-            "__id", "__e", _argmin_col(cent_rows, assign_method)["cid"].alias("cid")
-        )
+        assigned = v.select("__id", "__e", _argmin_arrow(cent_rows)["cid"].alias("cid"))
         cent_rows = sorted(
             (r["label"], list(r["cv"]))
             for r in ivf_centroids(assigned, "cid", "__e").collect()
@@ -721,7 +685,7 @@ def semantic_dedup_stats(
     min_cosine: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_method: str = "auto",
+    assign_method: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means cluster the embeddings
     (``kmeans_assign`` trajectory), then find near-duplicate pairs ONLY
@@ -734,21 +698,21 @@ def semantic_dedup_stats(
     (:func:`_cluster_drops`), never an all-pairs product. At corpus
     scale k grows with the data (SemDeDup uses 10k–100k clusters) to
     keep each cluster's pair count bounded; the assignment stage stays
-    per-row/zero-shuffle regardless of k."""
-    from cloud_dataflow_batch_processing_spark.plans.inspect import fan_out_scan
+    per-row/zero-shuffle regardless of k.
 
-    v = df.filter(vec_is_valid(vec_col)).select(
-        F.col(id_col).alias("__id"), _as_double(vec_col).alias("__e")
+    ``assign_method`` stays accepted for existing callers; ``"arrow"``
+    names the one assignment path and any other value is rejected."""
+    if assign_method != "arrow":
+        raise ValueError(f"assign_method must be 'arrow', got {assign_method!r}")
+    asg = _kmeans_fit_assign(df, k, iters, id_col, vec_col)
+    return _cluster_drops(
+        asg.select("__id", "__e", F.col("__b")["cid"].alias("cid")), min_cosine
     )
-    # Size-gated scan fan-out — see kmeans_assign.
-    v = fan_out_scan(v, "__id", min_bytes=FAN_OUT_MIN_BYTES)
-    cent_rows = kmeans_centroids(v, k, iters, assign_method)
-    asg = v.select("__id", "__e", _argmin_col(cent_rows, assign_method)["cid"].alias("cid"))
-    return _cluster_drops(asg, min_cosine)
 
 
 def sqdist_sql(a: str, b: str) -> str:
-    """Squared-distance twin over already-double list expressions."""
+    """Strict left-to-right squared distance over already-double list
+    expressions — the fold :func:`_argmin_arrow` reproduces."""
     return (
         f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
         f"list_transform(list_zip({a}, {b}), p -> (p[1] - p[2]) * (p[1] - p[2]))), "

@@ -210,8 +210,7 @@ def embedding_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_kmeans_assign",
     oracle=S.kmeans_assign_sql(k=8, iters=2),
     # Driver-certified r9; demoted late=True in r11 (50-primary budget):
-    # the k-means class stays primary via semantic_dedup_prune and the
-    # production Arrow twin semantic_kmeans_assign_arrow (late, r9).
+    # the k-means class stays primary via semantic_dedup_prune.
     late=True,
 )
 def semantic_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,38 +219,27 @@ def semantic_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     SemDeDup-style semantic dedup and of IVF index training. The oracle
     unrolls the SAME iterations in SQL, so the entire iterative
     trajectory (seeded centroids, decimal-exact updates, tie-broken
-    argmin) is certified per-row, not just the final counts.
-
-    r12 (VERDICT r11 #8): ships the ARROW assign path (broadcast
-    k×dim matrix + Arrow-batched numpy argmin — the plan the scale
-    posture requires, ~3x faster here). Values are bit-identical to
-    the literal-expression path by construction, and the literal path
-    keeps its own oracle certification in
-    tests/test_kmeans.py::test_literal_assign_path_matches_oracle
-    (dualscale) plus the always-on expr-vs-arrow equality test — the
-    twin proof VERDICT r11 #8 asked to preserve."""
+    argmin) is certified per-row, not just the final counts. Assignment
+    is the broadcast k×dim matrix + Arrow-batched numpy argmin
+    (extensions/similarity._argmin_arrow), whose op order matches the
+    oracle's left-to-right squared-distance fold."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.kmeans_assign(emb, k=8, iters=2, assign_method="arrow")
+    return S.kmeans_assign(emb, k=8, iters=2)
 
 
 @register(
     "semantic_kmeans_assign_arrow",
-    # Same trajectory oracle as semantic_kmeans_assign — certifies that
-    # the broadcast-matrix Arrow argmin (the large-k scale path) is
-    # bit-identical to the literal-expression path; registers late.
+    # Same trajectory oracle as semantic_kmeans_assign; registers late.
     oracle=S.kmeans_assign_sql(k=8, iters=2),
     late=True,
 )
 def semantic_kmeans_assign_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd k-means with ``assign_method="arrow"``: centroids ship as
-    ONE broadcast k×dim numpy matrix and every assignment is an
-    Arrow-batched numpy argmin, so plan size is O(1) in k instead of
-    O(k×dim) literals — the path SemDeDup-realistic k (10k–100k
-    clusters) requires. Same binary64 op order as the literal path
-    (see extensions/similarity._argmin_arrow), hence the identical
-    full-trajectory oracle."""
+    """The same path as ``semantic_kmeans_assign`` now that k-means has
+    one assignment path (the broadcast-matrix Arrow argmin); the name is
+    kept because the driver window, the correctness records and the
+    SQL-facade and empty-input tests key on it."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.kmeans_assign(emb, k=8, iters=2, assign_method="arrow")
+    return S.kmeans_assign(emb, k=8, iters=2)
 
 
 @register(
@@ -263,14 +251,10 @@ def semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means, then drop the higher id of every within-cluster pair with
     cosine ≥ 0.9; reported per cluster as (n_members, n_dropped,
     n_kept). The pair verify is one group-by on the cluster id, the
-    same grouped kernel as the LSH pipelines, never all-pairs.
-    assign_method="arrow": bit-identical to the literal-
-    expression path (the semantic_kmeans_assign / _arrow twin pair
-    certifies both against ONE oracle) and the SemDeDup-realistic
-    posture (k grows to 10k-100k clusters, where the literal plan is
-    impossible); at sf0.1 it cut the three interpreted-HOF assignment
-    passes from ~5 s to ~1.5 s (r11, guide §4)."""
+    same grouped kernel as the LSH pipelines, never all-pairs. The
+    assignment is the broadcast-matrix Arrow argmin, the posture
+    SemDeDup-realistic k (10k-100k clusters) needs; at sf0.1 it cut
+    the three interpreted-HOF assignment passes from ~5 s to ~1.5 s
+    (r11, guide §4)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.semantic_dedup_stats(
-        emb, k=8, iters=2, min_cosine=0.9, assign_method="arrow"
-    )
+    return S.semantic_dedup_stats(emb, k=8, iters=2, min_cosine=0.9)

@@ -51,65 +51,6 @@ def test_kmeans_matches_numpy_lloyd(spark, sf_dir, tables, emb):
         assert dist == pytest.approx(float(np.sqrt(want_d2[i])), rel=1e-6)
 
 
-def test_arrow_assign_identical_to_expr(spark, tables):
-    """The broadcast-matrix Arrow argmin must be bit-identical to the
-    literal-expression path — same trajectory, same (cid, dist) rows
-    (both engines round dist to 6dp, so exact equality here)."""
-    a = sorted(
-        (r["vec_id"], r["cid"], r["dist"])
-        for r in S.kmeans_assign(
-            tables["embeddings"], k=8, iters=2, assign_method="expr"
-        ).collect()
-    )
-    b = sorted(
-        (r["vec_id"], r["cid"], r["dist"])
-        for r in S.kmeans_assign(
-            tables["embeddings"], k=8, iters=2, assign_method="arrow"
-        ).collect()
-    )
-    assert a == b
-
-
-@pytest.mark.dualscale
-@pytest.mark.parametrize(
-    "scale_dir", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"],
-    ids=["sf0.01", "sf0.1"],
-)
-def test_literal_assign_path_matches_oracle(spark, scale_dir):
-    """r12 (VERDICT r11 #8): the registry query semantic_kmeans_assign
-    now ships the arrow assign path, so the LITERAL-expression path's
-    oracle certification lives here — the same full-trajectory DuckDB
-    oracle, run against the expr path at both driver scales. Together
-    with test_arrow_assign_identical_to_expr this keeps the twin proof
-    (literal == oracle == arrow) intact."""
-    from tests.oracle import compare_frames, duckdb_con
-
-    con = duckdb_con(scale_dir)
-    from cloud_dataflow_batch_processing_spark.sources.testdata import load_tables
-
-    emb = load_tables(spark, scale_dir)["embeddings"]
-    got = S.kmeans_assign(emb, k=8, iters=2, assign_method="expr").toPandas()
-    want = con.execute(S.kmeans_assign_sql(k=8, iters=2)).df()
-    errs = compare_frames(got, want, "semantic_kmeans_assign[expr]")
-    assert not errs, errs
-
-
-def test_semantic_dedup_arrow_identical(spark, tables):
-    a = sorted(
-        tuple(r)
-        for r in S.semantic_dedup_stats(
-            tables["embeddings"], k=8, iters=2, min_cosine=0.9, assign_method="expr"
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in S.semantic_dedup_stats(
-            tables["embeddings"], k=8, iters=2, min_cosine=0.9, assign_method="arrow"
-        ).collect()
-    )
-    assert a == b
-
-
 def _lcg_vec(seed, dim):
     out, s = [], seed
     for _ in range(dim):
@@ -118,27 +59,12 @@ def _lcg_vec(seed, dim):
     return out
 
 
-def test_argmin_auto_dispatch(spark):
-    """auto = literal expressions at k<=ARROW_ASSIGN_K, Arrow above."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, _lcg_vec(i + 1, 8)) for i in range(4)], "id long, __e array<double>"
-    )
-    small = [(c, _lcg_vec(1000 + c, 8)) for c in range(4)]
-    big = [(c, _lcg_vec(1000 + c, 8)) for c in range(S.ARROW_ASSIGN_K + 1)]
-    plan_small = df.select(S._argmin_col(small, "auto").alias("b"))._jdf.queryExecution().toString()
-    plan_big = df.select(S._argmin_col(big, "auto").alias("b"))._jdf.queryExecution().toString()
-    assert "ArrowEvalPython" not in plan_small
-    assert "ArrowEvalPython" in plan_big
-
-
 @pytest.mark.slowsweep
 def test_argmin_arrow_bounded_plan_at_k1024(spark):
-    """The VERDICT scale fix: at k=1024 × dim=64 the literal path would
-    inline ~65k literals and die in analysis; the Arrow path's plan must
-    stay O(1) in k, plan in bounded time, and produce the numpy-exact
-    argmin."""
+    """The VERDICT scale fix: at k=1024 × dim=64, inlining the centroids
+    as literals would mean ~65k literals and death in analysis; the
+    broadcast-matrix argmin's plan must stay O(1) in k, plan in bounded
+    time, and produce the numpy-exact argmin."""
     import time
 
     from pyspark.sql import functions as F
@@ -149,14 +75,14 @@ def test_argmin_arrow_bounded_plan_at_k1024(spark):
     cents = [(c, _lcg_vec(500_000 + c, dim)) for c in range(k)]
 
     t0 = time.monotonic()
-    out = df.select("vec_id", S._argmin_col(cents, "auto").alias("b")).select(
+    out = df.select("vec_id", S._argmin_arrow(cents).alias("b")).select(
         "vec_id", "b.cid", "b.d2"
     )
     plan = out._jdf.queryExecution().toString()
     rows = {r["vec_id"]: (r["cid"], r["d2"]) for r in out.collect()}
     elapsed = time.monotonic() - t0
 
-    # Bounded plan: no per-centroid literals (the k=8 literal plan alone
+    # Bounded plan: no per-centroid literals (a k=8 literal plan alone
     # is ~20 KB; k=1024 inlined would be megabytes and minutes of
     # analysis). Generous wall bound — this is a planning-blowup guard,
     # not a microbenchmark.
@@ -171,6 +97,25 @@ def test_argmin_arrow_bounded_plan_at_k1024(spark):
     for i in range(n):
         assert rows[i][0] == want[i]
         assert rows[i][1] == pytest.approx(d2[i, want[i]], rel=1e-9)
+
+
+def test_argmin_rejects_wrong_dimension(spark):
+    """A row whose length differs from the centroids' must fail the
+    action, naming both dimensions. The lengths below sum to 4 × 2, so
+    flattening the batch and reshaping it to (4, 2) would succeed and
+    splice the 1-dim and 3-dim rows into wrong answers."""
+    df = spark.createDataFrame(
+        [(0, [0.1, 0.1]), (1, [9.9]), (2, [9.9, 0.1, 0.1]), (3, [9.9, 9.9])],
+        "vec_id long, __e array<double>",
+    ).coalesce(1)  # one Arrow batch holds all four rows
+    out = df.select("vec_id", S._argmin_arrow([(0, [0.0, 0.0]), (1, [10.0, 10.0])]))
+    with pytest.raises(Exception, match=r"expects vectors of dim 2 .*found dim [13]"):
+        out.collect()
+
+
+def test_semantic_dedup_rejects_other_assign_method(tables):
+    with pytest.raises(ValueError, match="assign_method"):
+        S.semantic_dedup_stats(tables["embeddings"], assign_method="expr")
 
 
 def test_semantic_dedup_matches_brute_force(spark, sf_dir, tables, emb):

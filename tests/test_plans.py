@@ -319,10 +319,11 @@ def test_decontaminate_broadcasts_eval_side(spark, sf_dir):
 
 def test_kmeans_final_plan_scan_only(spark, sf_dir):
     """k-means assignment must be the MLlib shape: centroids
-    materialized driver-side, assignment a pure per-row argmin over
-    literal centroids — the returned plan is scan → project with ZERO
-    exchanges and no join of any kind. A plan that joins or shuffles
-    the corpus per iteration is the 100 TB cost bug."""
+    materialized driver-side, assignment a pure per-row argmin over a
+    broadcast centroid matrix — the returned plan is scan → per-row
+    Arrow argmin with ZERO exchanges and no join of any kind. A plan
+    that joins or shuffles the corpus per iteration is the 100 TB cost
+    bug."""
     from cloud_dataflow_batch_processing_spark.plans import count_shuffles, executed_plan
 
     df = REGISTRY["semantic_kmeans_assign"].fn(spark, sf_dir)
@@ -411,8 +412,7 @@ def test_trained_ivf_index_prunes_partitions(spark, tables, tmp_path):
 
     idx = str(tmp_path / "ivf_index")
     emb = tables["embeddings"]
-    # k > ARROW_ASSIGN_K so the build exercises the broadcast argmin.
-    k = S.ARROW_ASSIGN_K + 8
+    k = 72
     S.ivf_build_index(emb, idx, k=k, iters=1)
 
     cents = spark.read.parquet(idx + "/centroids")
@@ -455,6 +455,7 @@ def test_ivf_index_append_incremental(spark, tables, tmp_path):
     would give for those rows, since centroids are frozen), and
     (b) make the new vectors immediately searchable with the same
     pruned plan — no retrain, no rewrite of existing partitions."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from cloud_dataflow_batch_processing_spark.extensions import similarity as S
@@ -477,22 +478,40 @@ def test_ivf_index_append_incremental(spark, tables, tmp_path):
     hits = [r["vec_id"] for r in S.ivf_search(spark, idx, qv, topk=3, nprobe=2).collect()]
     assert target in hits
 
-    # Appended assignments match a fresh argmin against the stored
-    # centroids (frozen-centroid semantics).
-    cents = [
+    # Appended assignments match an independent numpy argmin against
+    # the stored centroids (frozen-centroid semantics).
+    cents = sorted(
         (int(r["cid"]), list(r["cv"]))
         for r in spark.read.parquet(idx + "/centroids").collect()
-    ]
-    v = new.select(F.col("vec_id"), F.transform("embedding", lambda x: x.cast("double")).alias("__e"))
-    want = {
-        r["vec_id"]: r["cid"]
-        for r in v.select("vec_id", S._argmin_col(cents, "expr")["cid"].alias("cid")).collect()
-    }
+    )
+    c_ids = np.array([c for c, _ in cents])
+    c = np.array([cv for _, cv in cents], dtype=np.float64)
+    rows = new.select("vec_id", "embedding").collect()
+    x = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
+    d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+    want = dict(zip((r["vec_id"] for r in rows), c_ids[np.argmin(d2, axis=1)]))
     got = {
         r["vec_id"]: r["cid"]
         for r in vecs.filter(F.col("vec_id") >= 400).select("vec_id", "cid").collect()
     }
     assert got == want
+
+
+def test_ivf_index_append_skips_invalid_vectors(spark, tmp_path):
+    """Append filters ``vec_is_valid`` as the build does: a NULL or zero
+    vector in a new batch is never indexed."""
+    from cloud_dataflow_batch_processing_spark.extensions import similarity as S
+
+    schema = "vec_id long, embedding array<double>"
+    base = [(i, [float((i * 7 + d) % 5) + 0.5 for d in range(4)]) for i in range(16)]
+    idx = str(tmp_path / "ivf_valid")
+    S.ivf_build_index(spark.createDataFrame(base, schema), idx, k=4, iters=1)
+
+    batch = [(100, [1.0, 2.0, 3.0, 4.0]), (101, None), (102, [0.0] * 4)]
+    S.ivf_index_append(spark.createDataFrame(batch, schema), idx)
+    ids = {r["vec_id"] for r in spark.read.parquet(idx + "/vectors").collect()}
+    assert 100 in ids
+    assert not ids & {101, 102}, ids & {101, 102}
 
 
 def test_substring_dedup_plan_shape(spark, sf_dir):
