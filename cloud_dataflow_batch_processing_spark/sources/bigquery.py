@@ -51,14 +51,20 @@ def disposition_to_mode(write_disposition: str) -> str:
         raise ValueError(f"unknown write disposition: {write_disposition!r}") from None
 
 
+def _class_on_classpath(spark: SparkSession, class_name: str) -> bool:
+    """Whether the JVM's context class loader (the one py4j resolves
+    classes with) can see ``class_name``. A resource lookup returns null
+    for a missing class instead of throwing: ``Class.forName`` on an
+    absent class costs ~18 ms per call for the JVM exception and the
+    ``Py4JJavaError`` py4j builds from it, this ~1.5 ms."""
+    loader = spark._jvm.java.lang.Thread.currentThread().getContextClassLoader()
+    return loader.getResource(class_name.replace(".", "/") + ".class") is not None
+
+
 def _connector_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "com.google.cloud.spark.bigquery.BigQueryRelationProvider"
-        )
-        return True
-    except Exception:
-        return False
+    return _class_on_classpath(
+        spark, "com.google.cloud.spark.bigquery.BigQueryRelationProvider"
+    )
 
 
 def _local_table_path(warehouse: str, table: str) -> str:
@@ -102,19 +108,31 @@ def write_table(
     create_disposition: str = CreateDisposition.CREATE_IF_NEEDED,
     write_disposition: str = WriteDisposition.WRITE_EMPTY,
     warehouse: str | None = None,
-) -> None:
+) -> DataFrame:
     """Beam twin: BigQuerySink (beam/io/gcp/bigquery.py:448-601).
+    Returns the landed table as a lazy frame, so downstream transforms
+    read the sink instead of recomputing ``df``.
 
     Note the default matches Beam's (WRITE_EMPTY → errorifexists); the
     reference pipelines pass WRITE_TRUNCATE (dataflow_pipeline.py:176).
     The 1000-row insert buffering (reference :694) is connector-internal
     in Spark — no user-level twin needed.
+
+    The local warehouse writes zstd parquet with dictionary encoding
+    off. The reference's tables are mostly high-cardinality strings: the
+    dictionary writer spends its time hashing values and then falls
+    back to plain pages anyway. Writing the cached 200k-row reference
+    raw table (29 MB of CSV) on ``local[2]``, 4-CPU box, median of 5:
+    snappy with dictionaries 0.93 s and 6.44 MB; zstd without 0.69 s
+    and 6.76 MB; snappy without 0.65 s but 12.0 MB. The landed frame is
+    read back with ``df``'s schema, which skips parquet footer
+    inference.
     """
     mode = disposition_to_mode(write_disposition)
     spark = df.sparkSession
     if _connector_available(spark):
         df.write.format("bigquery").mode(mode).option("table", table).save()
-        return
+        return spark.read.format("bigquery").option("table", table).load()
     warehouse = warehouse or os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/bq_warehouse")
     path = _local_table_path(warehouse, table)
     if create_disposition == CreateDisposition.CREATE_NEVER and not os.path.isdir(path):
@@ -122,4 +140,10 @@ def write_table(
             f"table {table} does not exist and create_disposition=CREATE_NEVER "
             "(reference beam/io/gcp/bigquery.py:255-263)"
         )
-    df.write.mode(mode).parquet(path)
+    (
+        df.write.mode(mode)
+        .option("compression", "zstd")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(path)
+    )
+    return spark.read.schema(df.schema).parquet(path)

@@ -119,9 +119,32 @@ def test_disposition_mapping():
 def test_bigquery_local_fallback_roundtrip(spark, tmp_path):
     wh = str(tmp_path / "wh")
     df = create(spark, [(1, "a"), (2, "b")], schema=["id", "s"])
-    write_table(df, "ds.t", write_disposition=WriteDisposition.WRITE_TRUNCATE, warehouse=wh)
+    landed = write_table(
+        df, "ds.t", write_disposition=WriteDisposition.WRITE_TRUNCATE, warehouse=wh
+    )
+    assert {(r.id, r.s) for r in landed.collect()} == {(1, "a"), (2, "b")}
+    assert landed.schema == df.schema
     back = read_table(spark, table="ds.t", warehouse=wh)
     assert {(r.id, r.s) for r in back.collect()} == {(1, "a"), (2, "b")}
+
+    # Warehouse encoding: zstd, no dictionary pages, on every column
+    # chunk. Repeated values, so a dictionary-on writer would keep its
+    # dictionary instead of falling back to plain pages.
+    import pyarrow.parquet as pq
+
+    rep = create(spark, [(1, "a"), (2, "b")] * 50, schema=["id", "s"])
+    write_table(rep, "ds.rep", write_disposition=WriteDisposition.WRITE_TRUNCATE, warehouse=wh)
+    chunks = []
+    for frag in pq.ParquetDataset(os.path.join(wh, "ds", "rep")).fragments:
+        md = frag.metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            chunks += [rg.column(c) for c in range(rg.num_columns)]
+    assert chunks
+    for col in chunks:
+        assert col.compression == "ZSTD", col
+        assert not col.has_dictionary_page, col
+        assert not any("DICTIONARY" in e for e in col.encodings), col
 
     # WRITE_EMPTY on existing table must fail (beam dispositions :271-274)
     with pytest.raises(Exception):
@@ -140,6 +163,13 @@ def test_bigquery_local_fallback_roundtrip(spark, tmp_path):
     # query mode over the warehouse views
     got = read_table(spark, query="SELECT COUNT(*) AS n FROM t", warehouse=wh).head().n
     assert got == 2
+
+
+def test_class_on_classpath_lookup(spark):
+    from cloud_dataflow_batch_processing_spark.sources.bigquery import _class_on_classpath
+
+    assert _class_on_classpath(spark, "org.apache.spark.sql.SparkSession")
+    assert not _class_on_classpath(spark, "com.example.no.such.Provider")
 
 
 def test_read_avro_falls_back_without_jar(spark, tmp_path):

@@ -83,6 +83,37 @@ def test_reference_pipeline_two_sinks(spark, nyc_csv, tmp_path):
     assert dict(t_back.dtypes)["count_listings"] == "string"
 
 
+def test_reference_transform_reads_landed_raw_table(spark, nyc_csv, tmp_path, monkeypatch):
+    """The CSV is parsed once per run: only the raw sink's write scans
+    it, the group-by is built on the landed raw table, and the returned
+    frames read the landed tables."""
+    from cloud_dataflow_batch_processing_spark import workload
+    from cloud_dataflow_batch_processing_spark.plans.inspect import count_plan_nodes
+
+    csv_scans_per_write = []
+    real_write_table = workload.write_table
+
+    def counting_write_table(df, *args, **kwargs):
+        csv_scans_per_write.append(count_plan_nodes(df, "Scan csv"))
+        return real_write_table(df, *args, **kwargs)
+
+    monkeypatch.setattr(workload, "write_table", counting_write_table)
+    raw, transformed = run_reference_pipeline(
+        spark,
+        nyc_csv,
+        "nyc.once",
+        schema_fields=NYC_FIELDS,
+        warehouse=str(tmp_path / "wh"),
+    )
+    assert csv_scans_per_write == [1, 0]
+    for df in (raw, transformed):
+        assert count_plan_nodes(df, "Scan csv") == 0
+        assert count_plan_nodes(df, "Scan parquet") == 1
+    assert raw.count() == 60
+    got = {r.neighbourhood: r.count_listings for r in transformed.collect()}
+    assert got == {k: str(v) for k, v in _expected_sums().items()}
+
+
 @pytest.fixture()
 def nyc_csv_multiline(tmp_path):
     """An adversarial AB_NYC_2019-schema CSV at the golden output's
