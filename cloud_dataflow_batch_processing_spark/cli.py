@@ -15,9 +15,10 @@ warehouse (sources/bigquery.py).
 from __future__ import annotations
 
 import argparse
+import sys
 
 from cloud_dataflow_batch_processing_spark.schema import bq_schema_file_to_struct
-from cloud_dataflow_batch_processing_spark.session import get_spark
+from cloud_dataflow_batch_processing_spark.session import cds_state, get_spark
 from cloud_dataflow_batch_processing_spark.workload import run_reference_pipeline
 
 
@@ -33,6 +34,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--warehouse", default=None, help="local warehouse dir (fallback sink)")
     p.add_argument("--master", default=None, help="Spark master (default local[$SPARK_GRAFT_CPUS])")
     return p
+
+
+def _session(app_name: str, master: str | None):
+    """The tuned session; how its driver JVM started goes to stderr, so
+    stdout's last line stays the command's result."""
+    spark = get_spark(app_name=app_name, master=master)
+    print(f"cold start: {cds_state(spark)}", file=sys.stderr)
+    return spark
 
 
 def run_query(argv: list[str]) -> None:
@@ -71,7 +80,7 @@ def run_query(argv: list[str]) -> None:
     if args.oracle:
         print((REGISTRY[args.name].oracle or "-- no oracle registered --").strip())
         return
-    spark = get_spark(app_name=f"cdbp-query-{args.name}", master=args.master)
+    spark = _session(f"cdbp-query-{args.name}", args.master)
     df = REGISTRY[args.name].fn(spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")
@@ -118,7 +127,7 @@ def run_sql(argv: list[str]) -> None:
         from cloud_dataflow_batch_processing_spark.sql_dialect import translate_duckdb
 
         query = translate_duckdb(query)
-    spark = get_spark(app_name="cdbp-sql", master=args.master)
+    spark = _session("cdbp-sql", args.master)
     df = engine_sql(spark, query, args.sf_dir)
     if args.explain:
         df.explain("formatted")
@@ -132,16 +141,14 @@ def run_sql(argv: list[str]) -> None:
 
 def run(argv: list[str] | None = None) -> None:
     if argv is None:
-        import sys as _sys
-
-        argv = _sys.argv[1:]
+        argv = sys.argv[1:]
     argv = list(argv)
     if argv and argv[0] == "query":
         return run_query(argv[1:])
     if argv and argv[0] == "sql":
         return run_sql(argv[1:])
     args = build_parser().parse_args(argv)
-    spark = get_spark(app_name="cdbp-reference-pipeline", master=args.master)
+    spark = _session("cdbp-reference-pipeline", args.master)
     st = bq_schema_file_to_struct(args.schema)
     raw, transformed = run_reference_pipeline(
         spark,

@@ -33,8 +33,9 @@ def test_cli_runs_reference_pipeline(spark, tmp_path, capsys):
             "--warehouse", wh,
         ]
     )
-    out = capsys.readouterr().out
-    assert "raw rows written: 6" in out
+    captured = capsys.readouterr()
+    assert captured.out.splitlines()[-1] == "raw rows written: 6; groups written: 2"
+    assert "cold start: " in captured.err
     t = spark.read.parquet(os.path.join(wh, "nyc", "t_transform"))
     got = {r.neighbourhood: r.count_listings for r in t.collect()}
     assert got == {"A": str(0 + 2 + 4), "B": str(1 + 3 + 5)}

@@ -298,7 +298,12 @@ def test_bucketed_materialization_identical_and_exchange_free(spark, corpus, tmp
         assert n_ex == 1, f"expected only the doc_id window exchange, got {n_ex}:\n{plan}"
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        if old_aqe is not None:
+        # Unset, not skip: a left-over -1 keeps AQE from turning later
+        # tests' joins into broadcasts (the 396-row broadcast pinned for
+        # corpus_build_full in tests/data/stage_profile_baseline.json).
+        if old_aqe is None:
+            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        else:
             spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
 
     tables_before = {t.name for t in spark.catalog.listTables()}
