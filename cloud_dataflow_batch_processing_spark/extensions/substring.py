@@ -22,15 +22,14 @@ Scale posture (100 TB):
 - Tokenize + span hash is per-row whole-stage codegen; the posexplode
   is the unavoidable K-per-token expansion every substring-dedup
   design pays (the suffix array pays the same K log n).
-- Duplicate detection (default ``dup_marking="join"``): span counts
-  aggregate with map-side partial combine (the shuffle moves
-  near-distinct hashes, not span rows), only hashes with count > 1
-  survive — a frame bounded by the DISTINCT duplicated-span count —
-  and the spans semi-join against it (AQE broadcasts it when small,
-  skew-splits when not; no unsplittable per-hash group anywhere).
-  ``dup_marking="window"`` keeps the minimal-shuffle window-count
-  reference form, whose per-hash window group a boilerplate mega-span
-  would make an unsplittable hot task.
+- Duplicate detection: span counts aggregate with map-side partial
+  combine (the shuffle moves near-distinct hashes, not span rows),
+  only hashes with count > 1 survive — a frame bounded by the DISTINCT
+  duplicated-span count — and the spans semi-join against it (AQE
+  broadcasts it when small, skew-splits when not). A count window
+  partitioned by the hash would need one shuffle fewer, but a
+  boilerplate mega-span would make its per-hash group one unsplittable
+  hot task.
 - Interval merge + per-doc stats shuffle on doc_id (narrow, exactly
   the partitioning the next corpus stage wants).
 - No driver-side state, no collect: output scales with the corpus.
@@ -40,27 +39,70 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from cloud_dataflow_batch_processing_spark.extensions.dedup import (
-    shingles_from_token_hashes,
-    token_hashes,
-    token_hashes_sql,
-)
+from cloud_dataflow_batch_processing_spark.extensions.dedup import token_hashes_sql
 from cloud_dataflow_batch_processing_spark.functions.text import (
     HASH_MOD,
     HASH_MULT,
     tokens,
     tokens_sql,
 )
+from cloud_dataflow_batch_processing_spark.plans.inspect import fan_out_scan
 
 SPAN_TOKENS = 8
 
-# Canonical implementations moved to plans/inspect.py (r11 — the
-# fan-out pattern now serves several Arrow-pass operators and dedup.py
-# cannot import from this module without a cycle); re-exported here
-# for the existing importers.
-from cloud_dataflow_batch_processing_spark.plans.inspect import (  # noqa: F401
-    plan_has_wide_node as _plan_has_wide_node,
-)
+
+def _span_frame(
+    df: DataFrame, id_col: str, text_col: str, k: int, th_col: str | None = None
+) -> DataFrame:
+    """(doc_id, n_tokens, pos, h) for every K-token span at 1-based token
+    position ``pos`` — the one span builder of the batch, incremental
+    and decontamination pipelines.
+
+    Span hashes come from the Arrow-batched twin (functions/text_fast.py,
+    value-identical by the certified polynomial): the Python UDF node is
+    a hard optimizer barrier, so the char fold is computed ONCE per row
+    no matter how Catalyst collapses the projections above it. A
+    pure-Column HOF form is vulnerable to CollapseProject re-embedding
+    the fold into all k element_at references inside the span transform
+    — measured 234 s vs 0.6 s warm at sf0.1 (the NOTES r3 quadratic-HOF
+    trap, third sighting).
+
+    ``th_col`` (r12): consume an ALREADY-COMPUTED token-hash column
+    instead of re-tokenizing ``text_col`` — the identical vectorized
+    span fold runs on the carried hashes (corpus_build tokenizes the
+    corpus once; this stage previously re-tokenized every surviving
+    document)."""
+    from cloud_dataflow_batch_processing_spark.functions.text_fast import (
+        span_hashes_fast,
+        span_hashes_from_th_fast,
+    )
+
+    if th_col is None:
+        sp = span_hashes_fast(F.col(text_col), k)
+    else:
+        sp = span_hashes_from_th_fast(F.col(th_col), k)
+    # No size(__sp) > 0 filter here: posexplode drops empty lists
+    # anyway, and a filter referencing the UDF column gets pushed
+    # below the fan-out repartition, DUPLICATING the ArrowEvalPython
+    # node (the UDF then runs twice per row — observed in the executed
+    # plan).
+    staged = df.select(F.col(id_col).alias("doc_id"), sp.alias("__sp")).select(
+        "doc_id",
+        # n_tokens of a doc with >= k tokens is |spans| + k - 1; shorter
+        # docs return an empty span list and posexplode drops them.
+        (F.size("__sp") + (k - 1)).alias("n_tokens"),
+        "__sp",
+    )
+    return staged.select(
+        "doc_id", "n_tokens", F.posexplode("__sp").alias("pos0", "h")
+    ).select("doc_id", "n_tokens", (F.col("pos0") + 1).alias("pos"), "h")
+
+
+def _repeated_hashes(spans: DataFrame) -> DataFrame:
+    """(h) of every span hash seen more than once in ``spans``."""
+    return (
+        spans.groupBy("h").agg(F.count(F.lit(1)).alias("__n")).filter(F.col("__n") > 1)
+    ).select("h")
 
 
 def _dup_spans(
@@ -68,116 +110,25 @@ def _dup_spans(
     id_col: str,
     text_col: str,
     k: int,
-    fast_hashing: bool = True,
-    dup_marking: str = "join",
     materialize: str = "cache",
     scratch_dir: str | None = None,
     th_col: str | None = None,
 ) -> DataFrame:
-    """(doc_id, n_tokens, pos) for every K-token span at 1-based token
-    position ``pos`` whose hash occurs >1 time corpus-wide (counting
-    within-document repeats, per the paper: ANY second occurrence
-    marks the span).
-
-    The token-hash stage defaults to the Arrow-batched fast twin
-    (functions/text_fast.py, value-identical by the certified
-    polynomial): the Python UDF node is a hard optimizer barrier, so
-    the char fold is computed ONCE per row no matter how Catalyst
-    collapses the projections above it. The pure-Column HOF form is
-    vulnerable to CollapseProject re-embedding the fold into all k
-    element_at references inside the span transform — measured 234 s
-    vs 0.6 s warm at sf0.1 (the NOTES r3 quadratic-HOF trap, third
-    sighting); ``fast_hashing=False`` keeps the HOF path for
-    oracle-form reference only.
-
-    ``th_col`` (r12): consume an ALREADY-COMPUTED token-hash column
-    instead of re-tokenizing ``text_col`` — the identical vectorized
-    span fold runs on the carried hashes (corpus_build tokenizes the
-    corpus once; this stage previously re-tokenized every surviving
-    document)."""
-    if th_col is not None:
-        from cloud_dataflow_batch_processing_spark.functions.text_fast import (
-            span_hashes_from_th_fast,
-        )
-
-        staged = df.select(
-            F.col(id_col).alias("doc_id"),
-            span_hashes_from_th_fast(F.col(th_col), k).alias("__sp"),
-        ).select(
-            "doc_id",
-            (F.size("__sp") + (k - 1)).alias("n_tokens"),
-            "__sp",
-        )
-    elif fast_hashing:
-        from cloud_dataflow_batch_processing_spark.functions.text_fast import (
-            span_hashes_fast,
-        )
-
+    """(doc_id, n_tokens, pos) for every K-token span whose hash occurs
+    >1 time corpus-wide (counting within-document repeats, per the
+    paper: ANY second occurrence marks the span)."""
+    if th_col is None:
         # The span-hash stage runs where the scan runs: a corpus read
         # from fewer splits than cores (one small file at bench scale)
         # would hash on one task. Fan out first — a narrow exchange of
         # raw text, and a no-op at real scale where input splits
-        # already exceed the core count.
-        # Hash-repartition on the id (NOT round-robin: round-robin
-        # injects a sort-before-repartition for retry determinism,
-        # which re-derives the projection and duplicates the UDF node
-        # below the exchange — observed in the executed plan).
-        # Only scan-shaped inputs need the fan-out: a frame downstream
-        # of a join/aggregate/repartition is already shuffle-spread,
-        # and probing .rdd.getNumPartitions() on such a frame forces
-        # AQE to EXECUTE its upstream stages — measured as a full
-        # duplicate run of the corpus pipeline in corpus_build_full.
-        # Walk the analyzed plan's node CLASS names, not the plan
-        # string (ADVICE r4): a column or relation named e.g.
-        # "window_start" must not false-positive and silently skip the
-        # fan-out (single-task hashing on small-split inputs).
-        scan_shaped = not _plan_has_wide_node(df)
-        sc = df.sparkSession.sparkContext
-        if scan_shaped and df.rdd.getNumPartitions() < sc.defaultParallelism:
-            df = df.repartition(sc.defaultParallelism, F.col(id_col))
-        # No size(__sp) > 0 filter here: posexplode drops empty lists
-        # anyway, and a filter referencing the UDF column gets pushed
-        # below the repartition, DUPLICATING the ArrowEvalPython node
-        # (the UDF then runs twice per row — observed in the executed
-        # plan).
-        staged = df.select(
-            F.col(id_col).alias("doc_id"),
-            span_hashes_fast(F.col(text_col), k).alias("__sp"),
-        ).select(
-            "doc_id",
-            # n_tokens of a doc with >= k tokens is |spans| + k - 1;
-            # shorter docs return an empty span list and are exempt,
-            # matching the HOF path's size(__th) >= k filter.
-            (F.size("__sp") + (k - 1)).alias("n_tokens"),
-            "__sp",
-        )
-    else:
-        staged = (
-            df.select(F.col(id_col).alias("doc_id"), token_hashes(text_col).alias("__th"))
-            .filter(F.size("__th") >= k)
-            .select(
-                "doc_id",
-                F.size("__th").alias("n_tokens"),
-                shingles_from_token_hashes(F.col("__th"), k).alias("__sp"),
-            )
-        )
-    spans = staged.select(
-        "doc_id", "n_tokens", F.posexplode("__sp").alias("pos0", "h")
-    ).select("doc_id", "n_tokens", (F.col("pos0") + 1).alias("pos"), "h")
-    if dup_marking == "window":
-        # One shuffle of the span rows on h — but the count window
-        # buffers each hash's rows in ONE task: a boilerplate span
-        # repeated 10^7 times (license headers) is an unsplittable hot
-        # group. Kept as the minimal-shuffle reference form.
-        counted = spans.withColumn(
-            "__n", F.count(F.lit(1)).over(Window.partitionBy("h"))
-        )
-        return counted.filter(F.col("__n") > 1).select("doc_id", "n_tokens", "pos")
-    if dup_marking != "join":
-        raise ValueError(f"dup_marking must be join|window, got {dup_marking!r}")
-    # Production default: aggregate counts (map-side partials collapse
-    # each partition's repeats before the wire, so the count shuffle
-    # moves near-distinct hashes, not span rows), keep only dup hashes
+        # already exceed the core count, and for frames downstream of
+        # a wide node.
+        df = fan_out_scan(df, id_col)
+    spans = _span_frame(df, id_col, text_col, k, th_col)
+    # Aggregate counts (map-side partials collapse each partition's
+    # repeats before the wire, so the count shuffle moves
+    # near-distinct hashes, not span rows), keep only dup hashes
     # — a frame bounded by the DISTINCT duplicated-span count — and
     # semi-join the spans against it. AQE broadcasts the dup-hash side
     # when it fits and skew-splits the join when it doesn't; either
@@ -254,10 +205,9 @@ def _dup_spans(
         from cloud_dataflow_batch_processing_spark.caching import managed_cache
 
         spans = managed_cache(spans)
-    dup_hashes = (
-        spans.groupBy("h").agg(F.count(F.lit(1)).alias("__n")).filter(F.col("__n") > 1)
-    ).select("h")
-    return spans.join(dup_hashes, "h", "left_semi").select("doc_id", "n_tokens", "pos")
+    return spans.join(_repeated_hashes(spans), "h", "left_semi").select(
+        "doc_id", "n_tokens", "pos"
+    )
 
 
 def remove_intervals(
@@ -265,8 +215,6 @@ def remove_intervals(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    fast_hashing: bool = True,
-    dup_marking: str = "join",
     materialize: str = "cache",
     scratch_dir: str | None = None,
     th_col: str | None = None,
@@ -277,10 +225,7 @@ def remove_intervals(
     sorted by pos merge iff the gap <= k). Returns
     (doc_id, start_pos, end_pos) with token positions 1-based and
     end exclusive."""
-    dup = _dup_spans(
-        df, id_col, text_col, k, fast_hashing, dup_marking, materialize,
-        scratch_dir, th_col,
-    )
+    dup = _dup_spans(df, id_col, text_col, k, materialize, scratch_dir, th_col)
     return _merge_marked_spans(dup, k)
 
 
@@ -303,25 +248,13 @@ def _merge_marked_spans(marked: DataFrame, k: int) -> DataFrame:
     ).select("doc_id", "start_pos", "end_pos")
 
 
-def substring_dup_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SPAN_TOKENS,
-    fast_hashing: bool = True,
-    dup_marking: str = "join",
-    materialize: str = "cache",
-    scratch_dir: str | None = None,
-    th_col: str | None = None,
+def _interval_report(
+    iv: DataFrame, df: DataFrame, id_col: str, text_col: str, th_col: str | None = None
 ) -> DataFrame:
-    """Per-document substring-dedup report over ALL documents:
-    (doc_id, n_tokens, n_remove_intervals, removed_tokens,
-    kept_tokens, removed_frac). Documents with no duplicated span (or
-    fewer than k tokens) report zeros."""
-    iv = remove_intervals(
-        df, id_col, text_col, k, fast_hashing, dup_marking, materialize,
-        scratch_dir, th_col,
-    )
+    """Per-document report over ALL rows of ``df`` from its
+    (doc_id, start_pos, end_pos) intervals ``iv``: (doc_id, n_tokens,
+    n_remove_intervals, removed_tokens, kept_tokens, removed_frac).
+    Documents without an interval report zeros."""
     per_doc = iv.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_remove_intervals"),
         F.sum(F.col("end_pos") - F.col("start_pos")).alias("removed_tokens"),
@@ -330,13 +263,10 @@ def substring_dup_stats(
         # |th| == |tokens(text)| by the fast-twin contract (including
         # NULL text -> NULL on both sides), so the report's n_tokens
         # column needs no second pass over the text.
-        base = df.select(
-            F.col(id_col).alias("doc_id"), F.size(F.col(th_col)).alias("n_tokens")
-        )
+        n_tokens = F.size(F.col(th_col))
     else:
-        base = df.select(
-            F.col(id_col).alias("doc_id"), F.size(tokens(text_col)).alias("n_tokens")
-        )
+        n_tokens = F.size(tokens(text_col))
+    base = df.select(F.col(id_col).alias("doc_id"), n_tokens.alias("n_tokens"))
     out = base.join(per_doc, "doc_id", "left").select(
         "doc_id",
         "n_tokens",
@@ -358,13 +288,28 @@ def substring_dup_stats(
     )
 
 
+def substring_dup_stats(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = SPAN_TOKENS,
+    materialize: str = "cache",
+    scratch_dir: str | None = None,
+    th_col: str | None = None,
+) -> DataFrame:
+    """Per-document substring-dedup report over ALL documents:
+    (doc_id, n_tokens, n_remove_intervals, removed_tokens,
+    kept_tokens, removed_frac). Documents with no duplicated span (or
+    fewer than k tokens) report zeros."""
+    iv = remove_intervals(df, id_col, text_col, k, materialize, scratch_dir, th_col)
+    return _interval_report(iv, df, id_col, text_col, th_col)
+
+
 def substring_dedup_text(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    fast_hashing: bool = True,
-    dup_marking: str = "join",
 ) -> DataFrame:
     """Cleaned corpus: each document's tokens with every removal
     interval excised, rejoined with single spaces (the paper's output
@@ -372,7 +317,7 @@ def substring_dedup_text(
     an array, then a per-row filter over token positions — the
     interval list is per-document and bounded by n_tokens/k, so the
     array column stays small even for pathological documents."""
-    iv = remove_intervals(df, id_col, text_col, k, fast_hashing, dup_marking)
+    iv = remove_intervals(df, id_col, text_col, k)
     iv_per_doc = iv.groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("start_pos", "end_pos"))).alias("__iv")
     )
@@ -509,46 +454,14 @@ def span_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    fast_hashing: bool = True,
 ) -> DataFrame:
     """The persistable state of incremental substring dedup: (h, cnt)
     span-hash counts of a corpus — one bounded hash-agg shuffle, the
     store is DISTINCT-span-sized. Mergeable by counter sum
     (``span_store_merge``), so daily batches fold in like the CMS/HLL
     state tables."""
-    staged = _span_frame(df, id_col, text_col, k, fast_hashing)
+    staged = _span_frame(df, id_col, text_col, k)
     return staged.groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def _span_frame(
-    df: DataFrame, id_col: str, text_col: str, k: int, fast_hashing: bool
-) -> DataFrame:
-    """(doc_id, n_tokens, pos, h) positioned spans — the shared stage
-    of the batch and incremental pipelines."""
-    if fast_hashing:
-        from cloud_dataflow_batch_processing_spark.functions.text_fast import (
-            span_hashes_fast,
-        )
-
-        staged = df.select(
-            F.col(id_col).alias("doc_id"),
-            span_hashes_fast(F.col(text_col), k).alias("__sp"),
-        ).select(
-            "doc_id", (F.size("__sp") + (k - 1)).alias("n_tokens"), "__sp"
-        )
-    else:
-        staged = (
-            df.select(F.col(id_col).alias("doc_id"), token_hashes(text_col).alias("__th"))
-            .filter(F.size("__th") >= k)
-            .select(
-                "doc_id",
-                F.size("__th").alias("n_tokens"),
-                shingles_from_token_hashes(F.col("__th"), k).alias("__sp"),
-            )
-        )
-    return staged.select(
-        "doc_id", "n_tokens", F.posexplode("__sp").alias("pos0", "h")
-    ).select("doc_id", "n_tokens", (F.col("pos0") + 1).alias("pos"), "h")
 
 
 def span_store_merge(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -562,7 +475,6 @@ def incremental_substring_dup_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    fast_hashing: bool = True,
 ) -> DataFrame:
     """Substring-dedup stats for a NEW batch against an EXISTING
     corpus's span store — the daily-increment shape (mirrors
@@ -577,44 +489,10 @@ def incremental_substring_dup_stats(
     spans and broadcast/skew-split by AQE in the semi-join."""
     from cloud_dataflow_batch_processing_spark.caching import managed_cache
 
-    spans = managed_cache(_span_frame(new_df, id_col, text_col, k, fast_hashing))
-    batch_dups = (
-        spans.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)
-    ).select("h")
-    dup_hashes = batch_dups.unionByName(store.select("h")).distinct()
+    spans = managed_cache(_span_frame(new_df, id_col, text_col, k))
+    dup_hashes = _repeated_hashes(spans).unionByName(store.select("h")).distinct()
     dup = spans.join(dup_hashes, "h", "left_semi").select("doc_id", "n_tokens", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    flagged = dup.withColumn(
-        "__new",
-        F.when(F.col("pos") - F.coalesce(F.lag("pos").over(w), F.lit(-k)) > k, 1).otherwise(0),
-    )
-    islands = flagged.withColumn(
-        "island",
-        F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    iv = islands.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("start_pos"), (F.max("pos") + k).alias("end_pos")
-    )
-    per_doc = iv.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_remove_intervals"),
-        F.sum(F.col("end_pos") - F.col("start_pos")).alias("removed_tokens"),
-    )
-    base = new_df.select(
-        F.col(id_col).alias("doc_id"), F.size(tokens(text_col)).alias("n_tokens")
-    )
-    out = base.join(per_doc, "doc_id", "left")
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("n_remove_intervals", F.lit(0)).alias("n_remove_intervals"),
-        F.coalesce("removed_tokens", F.lit(0)).alias("removed_tokens"),
-        (F.col("n_tokens") - F.coalesce("removed_tokens", F.lit(0))).alias("kept_tokens"),
-        F.round(
-            F.coalesce("removed_tokens", F.lit(0))
-            / F.nullif(F.col("n_tokens"), F.lit(0)),
-            4,
-        ).alias("removed_frac"),
-    )
+    return _interval_report(_merge_marked_spans(dup, k), new_df, id_col, text_col)
 
 
 def incremental_substring_stats_sql(
@@ -693,7 +571,6 @@ def decontaminate_span_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    fast_hashing: bool = True,
     broadcast_eval: bool = True,
 ) -> DataFrame:
     """Exact-substring benchmark decontamination (the GPT-3 appendix-C /
@@ -725,37 +602,19 @@ def decontaminate_span_stats(
     rolling polynomial (same fold both engines), interval merge is
     integer window arithmetic — see ``decontaminate_span_stats_sql``
     for the DuckDB twin the driver's hash gate runs."""
-    eval_h = _span_frame(eval_df, id_col, text_col, k, fast_hashing).select("h").distinct()
+    eval_h = _span_frame(eval_df, id_col, text_col, k).select("h").distinct()
     if broadcast_eval:
         eval_h = F.broadcast(eval_h)
-    spans = _span_frame(corpus, id_col, text_col, k, fast_hashing)
+    spans = _span_frame(corpus, id_col, text_col, k)
     marked = spans.join(eval_h, "h", "left_semi").select("doc_id", "n_tokens", "pos")
-    iv = _merge_marked_spans(marked, k)
-    per_doc = iv.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_contam_intervals"),
-        F.sum(F.col("end_pos") - F.col("start_pos")).alias("contaminated_tokens"),
-    )
-    base = corpus.select(
-        F.col(id_col).alias("doc_id"), F.size(tokens(text_col)).alias("n_tokens")
-    )
-    out = base.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("n_contam_intervals", F.lit(0)).alias("n_contam_intervals"),
-        F.coalesce("contaminated_tokens", F.lit(0)).alias("contaminated_tokens"),
-    )
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        "n_contam_intervals",
-        "contaminated_tokens",
-        (F.col("n_tokens") - F.col("contaminated_tokens")).alias("kept_tokens"),
-        # empty/whitespace-only doc: fraction undefined -> NULL, matching
-        # DuckDB's division-by-zero NULL (same contract as
-        # substring_dup_stats; never an ANSI DIVIDE_BY_ZERO).
-        F.round(
-            F.col("contaminated_tokens") / F.nullif(F.col("n_tokens"), F.lit(0)), 4
-        ).alias("contaminated_frac"),
+    return _interval_report(
+        _merge_marked_spans(marked, k), corpus, id_col, text_col
+    ).withColumnsRenamed(
+        {
+            "n_remove_intervals": "n_contam_intervals",
+            "removed_tokens": "contaminated_tokens",
+            "removed_frac": "contaminated_frac",
+        }
     )
 
 

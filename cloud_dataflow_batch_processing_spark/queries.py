@@ -63,16 +63,28 @@ def register(
 
 # DRIVER_WINDOW rotation (round 13), produced mechanically by
 # `scripts/rotate_window.py --write <names>`: the named queries lead —
-# the three whose pair verify this round replaced with one grouped
-# per-bucket cosine kernel (semantic_dedup_prune, ann_lsh_pairs,
-# dedup_embedding_cosine), so the external correctness gate certifies
-# the changed plans in the same round, plus streaming_lsh_dedup and
-# datastore_mutations_agg, whose parity tests sit in the slowsweep tier
-# and were last certified in r11 (VERDICT r12 #2). The rest is
-# least-recently-certified (the r10/r11 cohort), ties alphabetical.
-# Overlap with CORRECTNESS_r12.json is 2 <= 25, so the rotation gate
+# the five whose exact-substring span pipeline was folded into one span
+# builder, one dup-marking path and one per-document report
+# (substring_dedup_stats, substring_dedup_clean,
+# substring_dedup_incremental, decontaminate_exact_spans,
+# corpus_build_full) and dedup_near_exact_keep, whose near-exact key
+# lost its HOF token-hash branch — so the external correctness gate
+# certifies the changed code paths in the same round. They are followed
+# by the names the round's earlier rotation led with: the three whose
+# pair verify became one grouped per-bucket cosine kernel
+# (semantic_dedup_prune, ann_lsh_pairs, dedup_embedding_cosine) and
+# streaming_lsh_dedup and datastore_mutations_agg, whose parity tests
+# sit in the slowsweep tier (VERDICT r12 #2). The rest is
+# least-recently-certified, ties alphabetical. Overlap with
+# CORRECTNESS_r12.json is 3 <= 25, so the rotation gate
 # (tests/test_window_rotation.py) is green.
 DRIVER_WINDOW: tuple[str, ...] = (
+    "substring_dedup_stats",
+    "substring_dedup_clean",
+    "substring_dedup_incremental",
+    "decontaminate_exact_spans",
+    "corpus_build_full",
+    "dedup_near_exact_keep",
     "semantic_dedup_prune",
     "ann_lsh_pairs",
     "dedup_embedding_cosine",
@@ -80,7 +92,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "datastore_mutations_agg",
     "boilerplate_ngrams",
     "corpus_audit_report",
-    "corpus_build_full",
     "corpus_mix_temperature",
     "corpus_split_train_val",
     "dedup_exact",
@@ -118,11 +129,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "semantic_kmeans_assign",
     "sessionize_events",
     "snapshot_diff_orders",
-    "substring_dedup_stats",
-    "text_profile_single_pass",
-    "unigram_lm_quality",
-    "vocab_coverage_curve",
-    "window_rank_analytics",
 )
 
 

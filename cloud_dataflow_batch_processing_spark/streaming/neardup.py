@@ -40,28 +40,23 @@ from pyspark.sql import DataFrame, functions as F
 from cloud_dataflow_batch_processing_spark.extensions.dedup import (
     minhash_from_shingles,
     shingles_from_token_hashes,
-    token_hashes,
 )
 from cloud_dataflow_batch_processing_spark.functions.text import rolling_hash
 
 
-def with_near_exact_key(
-    df: DataFrame, text_col: str, fast_hashing: bool = True, key_col: str = "__sig"
-) -> DataFrame:
+def with_near_exact_key(df: DataFrame, text_col: str, key_col: str = "__sig") -> DataFrame:
     """Attach the near-exact dedup key: ``[0, lane0..lane15]`` for
     fingerprintable docs, ``[1, rolling_hash(text)]`` for docs too
     short to shingle (disjoint key spaces — lanes are nonnegative).
     Staged through materialized columns because Spark does not CSE the
-    shingle subtree across the 16 lanes (NOTES.md invariant 6)."""
-    if fast_hashing:
-        from cloud_dataflow_batch_processing_spark.functions.text_fast import (
-            token_hashes_fast,
-        )
+    shingle subtree across the 16 lanes (NOTES.md invariant 6). Token
+    hashes come from the Arrow-batched twin (functions/text_fast.py,
+    value-identical to the HOF fold)."""
+    from cloud_dataflow_batch_processing_spark.functions.text_fast import (
+        token_hashes_fast,
+    )
 
-        th = token_hashes_fast(F.col(text_col))
-    else:
-        th = token_hashes(text_col)
-    staged = df.withColumn("__th", th).withColumn(
+    staged = df.withColumn("__th", token_hashes_fast(F.col(text_col))).withColumn(
         "__sh", shingles_from_token_hashes(F.col("__th"))
     )
     lanes = F.array(*minhash_from_shingles(F.col("__sh")))
@@ -91,7 +86,6 @@ def suppress_near_exact_stream(
     text_col: str,
     ts_col: str,
     delay: str = "10 minutes",
-    fast_hashing: bool = True,
 ) -> DataFrame:
     """Emit only the FIRST document per 16-lane minhash signature seen
     within the watermark window; later docs whose full signature
@@ -104,7 +98,7 @@ def suppress_near_exact_stream(
     The signature pipeline is STAGED through materialized columns
     (token hashes → shingles → lanes) because Spark does not CSE a
     repeated expression subtree across the 16 lanes (NOTES.md
-    invariant 6); Arrow-batched token hashing by default — pandas UDFs
+    invariant 6); Arrow-batched token hashing — pandas UDFs
     run fine inside Structured Streaming micro-batches.
 
     Works identically on batch frames (plain dropDuplicates on the
@@ -112,7 +106,7 @@ def suppress_near_exact_stream(
     results against a batch model; the key semantics themselves are
     oracle-certified by the deterministic batch twin
     (queries_dedup.py::dedup_near_exact_keep)."""
-    keyed = with_near_exact_key(df, text_col, fast_hashing)
+    keyed = with_near_exact_key(df, text_col)
     if df.isStreaming:
         out = keyed.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(["__sig"])
     else:

@@ -1,6 +1,6 @@
 """Dump .explain("formatted") for named registry queries to files.
 
-    python scripts/dump_plans.py --names a,b --outdir plans/r11 --suffix _after
+    python scripts/dump_plans.py --names a,b --outdir plans/r13 --suffix _after
 
 The judge checks optimization claims (exchange counts, join strategies,
 PushedFilters, Python-eval nodes) against these files; generate the

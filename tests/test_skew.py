@@ -180,13 +180,17 @@ def test_bucketed_join_no_shuffle(spark, tables, tmp_path):
 
 def test_substring_dedup_boilerplate_mega_span(spark):
     """Adversarial skew for substring dedup: thousands of documents
-    sharing one boilerplate span (license-header shape). The default
-    join marking aggregates span counts map-side (the h-shuffle moves
-    near-distinct hashes) and semi-joins a dup-hash frame — no
-    unsplittable per-hash task. Both marking modes must agree exactly,
-    and every doc must lose exactly the boilerplate region."""
+    sharing one boilerplate span (license-header shape). Dup marking
+    aggregates span counts map-side (the h-shuffle moves near-distinct
+    hashes) and semi-joins a dup-hash frame — no unsplittable per-hash
+    task. The report must match the DuckDB twin exactly, and every doc
+    must lose exactly the boilerplate region."""
+    import duckdb
+    import pandas as pd
+
     from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
     from cloud_dataflow_batch_processing_spark.extensions import substring as SS
+    from tests.oracle import compare_frames
 
     n = 2000
     boiler = " ".join(f"lic{i}" for i in range(8))
@@ -195,15 +199,13 @@ def test_substring_dedup_boilerplate_mega_span(spark):
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    join_mode = {
-        r["doc_id"]: (r["removed_tokens"], r["kept_tokens"])
-        for r in SS.substring_dup_stats(df).collect()
-    }
+    spark_pdf = SS.substring_dup_stats(df).toPandas()
     release_managed_caches()
-    window_mode = {
-        r["doc_id"]: (r["removed_tokens"], r["kept_tokens"])
-        for r in SS.substring_dup_stats(df, dup_marking="window").collect()
-    }
-    release_managed_caches()
-    assert join_mode == window_mode
-    assert all(v == (8, 10) for v in join_mode.values())  # exactly the boilerplate
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    oracle_pdf = con.execute(SS.substring_dup_stats_sql()).df()
+    assert not compare_frames(spark_pdf, oracle_pdf, "substring_mega_span")
+    assert len(spark_pdf) == n
+    assert all(  # exactly the boilerplate
+        (r.removed_tokens, r.kept_tokens) == (8, 10) for r in spark_pdf.itertuples()
+    )

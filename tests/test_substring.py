@@ -382,21 +382,19 @@ def test_plan_wide_node_walk_ignores_lookalike_names(spark):
     must NOT make a plain scan-shaped frame look wide."""
     from pyspark.sql import functions as F
 
-    from cloud_dataflow_batch_processing_spark.extensions.substring import (
-        _plan_has_wide_node,
-    )
+    from cloud_dataflow_batch_processing_spark.plans.inspect import plan_has_wide_node
 
     plain = spark.createDataFrame(
         [(1, "a b c")], "window_start long, JoinAggregateRepartition string"
     ).select(F.col("window_start").alias("id"), F.col("JoinAggregateRepartition"))
-    assert not _plan_has_wide_node(plain)
+    assert not plan_has_wide_node(plain)
 
     agg = plain.groupBy("id").count()
-    assert _plan_has_wide_node(agg)
+    assert plan_has_wide_node(agg)
     joined = plain.join(plain.select("id"), "id")
-    assert _plan_has_wide_node(joined)
+    assert plan_has_wide_node(joined)
     repart = plain.repartition(4, F.col("id"))
-    assert _plan_has_wide_node(repart)
+    assert plan_has_wide_node(repart)
 
 
 def test_plan_wide_node_walk_sees_subqueries_sort_distinct(spark):
@@ -405,18 +403,16 @@ def test_plan_wide_node_walk_sees_subqueries_sort_distinct(spark):
     expression, a global sort (range exchange), and distinct()."""
     from pyspark.sql import functions as F
 
-    from cloud_dataflow_batch_processing_spark.extensions.substring import (
-        _plan_has_wide_node,
-    )
+    from cloud_dataflow_batch_processing_spark.plans.inspect import plan_has_wide_node
 
     df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, v double")
     df.createOrReplaceTempView("wide_probe_t")
     sub = spark.sql(
         "SELECT id, v FROM wide_probe_t WHERE v > (SELECT AVG(v) FROM wide_probe_t)"
     )
-    assert _plan_has_wide_node(sub)  # Aggregate only inside the subquery
-    assert _plan_has_wide_node(df.orderBy("v"))
-    assert _plan_has_wide_node(df.distinct())
+    assert plan_has_wide_node(sub)  # Aggregate only inside the subquery
+    assert plan_has_wide_node(df.orderBy("v"))
+    assert plan_has_wide_node(df.distinct())
 
 
 def test_plan_wide_node_walk_local_sort_is_narrow(spark):
@@ -424,13 +420,50 @@ def test_plan_wide_node_walk_local_sort_is_narrow(spark):
     but is global=false (no range exchange) — it must NOT make a
     scan-shaped frame look wide (that would silently skip the fan-out
     repartition and single-task the span hashing)."""
-    from cloud_dataflow_batch_processing_spark.extensions.substring import (
-        _plan_has_wide_node,
-    )
+    from cloud_dataflow_batch_processing_spark.plans.inspect import plan_has_wide_node
 
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, t string")
-    assert not _plan_has_wide_node(df.sortWithinPartitions("id"))
-    assert _plan_has_wide_node(df.orderBy("id"))
+    assert not plan_has_wide_node(df.sortWithinPartitions("id"))
+    assert plan_has_wide_node(df.orderBy("id"))
+
+
+def test_span_stage_fans_out_scan_shaped_input_only(spark):
+    """The span-hash stage fans a scan-shaped input with fewer splits
+    than cores out with ONE hash repartition on the doc id, below the
+    one Arrow span pass; an input already downstream of a wide node is
+    not repartitioned again."""
+    from pyspark.sql import functions as F
+
+    from cloud_dataflow_batch_processing_spark.plans.inspect import (
+        count_plan_nodes,
+        iter_plan_nodes,
+    )
+
+    def fan_out_exchanges(out, below_arrow):
+        """First lines of the REPARTITION_BY_NUM exchanges in ``out``'s
+        executed plan, or only of those below its one Arrow span pass."""
+        plan = out._jdf.queryExecution().executedPlan()
+        assert count_plan_nodes(out, "ArrowEvalPython") == 1
+        if below_arrow:
+            plan = next(
+                n for n in iter_plan_nodes(plan) if n.nodeName() == "ArrowEvalPython"
+            )
+        heads = (n.toString().splitlines()[0] for n in iter_plan_nodes(plan))
+        return [h for h in heads if h.startswith("Exchange") and "REPARTITION_BY_NUM" in h]
+
+    # one input split, fewer than the session's cores
+    one = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, _w("a", K)), (2, _w("a", K))], 1),
+        "doc_id long, text string",
+    )
+    assert one.rdd.getNumPartitions() == 1 < spark.sparkContext.defaultParallelism
+    under = fan_out_exchanges(SS.substring_dup_stats(one), below_arrow=True)
+    assert len(under) == 1 and "hashpartitioning(doc_id#" in under[0], under
+
+    # grouped on another key than doc_id, so a doc_id repartition would
+    # not be absorbed into the aggregate's own exchange
+    grouped = one.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    assert fan_out_exchanges(SS.substring_dup_stats(grouped), below_arrow=False) == []
 
 
 # --- exact-span decontamination (decontaminate_span_stats) ---------------
