@@ -260,6 +260,52 @@ def _ivf_scale_point(spark) -> dict:
     }
 
 
+HEAVY_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_data", "sf1_docs")
+
+
+def ensure_heavy_inputs() -> str:
+    """Generate the ``queries_heavy`` inputs into ``HEAVY_DIR`` if absent;
+    return the directory."""
+    from scripts.gen_scale_docs import (
+        ensure_scale_docs,
+        ensure_scale_embeddings,
+        ensure_scale_tpch,
+    )
+
+    ensure_scale_docs(HEAVY_DIR)
+    ensure_scale_embeddings(HEAVY_DIR)
+    ensure_scale_tpch(HEAVY_DIR)
+    return HEAVY_DIR
+
+
+def _semantic_dedup_prune_k256(spark, hdir: str):
+    from cloud_dataflow_batch_processing_spark.extensions import similarity as S
+
+    emb20k = spark.read.parquet(os.path.join(hdir, "embeddings.parquet")).filter("vec_id < 20000")
+    return S.semantic_dedup_stats(emb20k, k=256, iters=2, min_cosine=0.9)
+
+
+def _vcf_variants_agg_10x(spark, hdir: str):
+    from cloud_dataflow_batch_processing_spark.queries_io import vcf_variants_report
+
+    return vcf_variants_report(spark, hdir, n_records=40_000)
+
+
+def _registry(name: str):
+    return lambda spark, hdir: REGISTRY[name].fn(spark, hdir)
+
+
+# The ``queries_heavy`` entries, in output order: name -> fn(spark, dir)
+# returning the frame to time. ``scripts/ab.py --query`` reads it too.
+HEAVY_QUERIES = {
+    "pagerank_supplier_customer": _registry("pagerank_supplier_customer"),
+    "approx_distinct": _registry("approx_distinct"),
+    "gopher_repetition_filter": _registry("gopher_repetition_filter"),
+    "semantic_dedup_prune_k256": _semantic_dedup_prune_k256,
+    "vcf_variants_agg_10x": _vcf_variants_agg_10x,
+}
+
+
 def heavy_bench(spark) -> dict:
     """``queries_heavy`` (VERDICT r11 #2): the round-11 optimization
     targets re-timed at sf1-equivalent scale, median-of-3, so
@@ -270,7 +316,7 @@ def heavy_bench(spark) -> dict:
     Inputs are generated deterministically into ``.bench_data/sf1_docs``
     (documents 50k = 10x sf0.1; lineitem 6M / orders 1.5M / events 1M =
     the sf1 cardinalities; embeddings capped at 20k = 10x sf0.1's
-    2000 — vec_id < 20000 pushes to the scan). Four entries run the
+    2000 — vec_id < 20000 pushes to the scan). Three entries run the
     REGISTRY functions unmodified against that directory; the two
     non-registry shapes scale the one knob the registry pins
     (semantic dedup at k=256 — k=8 over 20k vectors would emit
@@ -279,28 +325,15 @@ def heavy_bench(spark) -> dict:
     recomputes from the parquet inputs; managed caches are released
     per entry (same discipline as the headline loop)."""
     from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
-    from cloud_dataflow_batch_processing_spark.extensions import similarity as S
-    from cloud_dataflow_batch_processing_spark.queries_io import vcf_variants_report
-    from scripts.gen_scale_docs import (
-        ensure_scale_docs,
-        ensure_scale_embeddings,
-        ensure_scale_tpch,
-    )
 
-    base = os.path.dirname(os.path.abspath(__file__))
-    hdir = os.path.join(base, ".bench_data", "sf1_docs")
-    ensure_scale_docs(hdir)
-    epath = ensure_scale_embeddings(hdir)
-    ensure_scale_tpch(hdir)
-
+    hdir = ensure_heavy_inputs()
     entries: dict[str, dict] = {}
-
-    def timed(name: str, thunk) -> None:
+    for name, fn in HEAVY_QUERIES.items():
         spark.sparkContext.setJobDescription(f"heavy: {name}")
         runs = []
         for _ in range(3):
             t0 = time.perf_counter()
-            thunk().write.format("noop").mode("overwrite").save()
+            fn(spark, hdir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
         release_managed_caches()
         spark.sparkContext.setJobDescription(None)
@@ -308,16 +341,6 @@ def heavy_bench(spark) -> dict:
             "median": round(sorted(runs)[1], 4),
             "runs": [round(r, 4) for r in runs],
         }
-
-    timed("pagerank_supplier_customer", lambda: REGISTRY["pagerank_supplier_customer"].fn(spark, hdir))
-    timed("approx_distinct", lambda: REGISTRY["approx_distinct"].fn(spark, hdir))
-    timed("gopher_repetition_filter", lambda: REGISTRY["gopher_repetition_filter"].fn(spark, hdir))
-    emb20k = spark.read.parquet(epath).filter("vec_id < 20000")
-    timed(
-        "semantic_dedup_prune_k256",
-        lambda: S.semantic_dedup_stats(emb20k, k=256, iters=2, min_cosine=0.9),
-    )
-    timed("vcf_variants_agg_10x", lambda: vcf_variants_report(spark, hdir, n_records=40_000))
     return entries
 
 

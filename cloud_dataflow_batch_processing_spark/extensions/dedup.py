@@ -195,7 +195,7 @@ def minhash_near_dup_pairs(
       shingle arrays, and the store is reusable across invocations
       (the incremental/repeated-dedup path). Bands take the
       ReuseExchange posture. A/B vs cache/checkpoint at 500k/5M in
-      NOTES.md (scripts/exp_minhash_bucketed.py).
+      NOTES.md ("Minhash bucketed signature store A/B", round 10).
     """
     # Staged plan — each expensive array is computed once per row:
     #   stage 1: char-fold token hashes   (the dominant cost)
@@ -210,8 +210,8 @@ def minhash_near_dup_pairs(
         # the store's bucket distribution, so the shingle arrays never
         # re-exchange (the narrow candidate side co-partitions to the
         # bucket count instead). Mirrors substring.py's span store;
-        # A/B vs cache/checkpoint in scripts/exp_minhash_bucketed.py,
-        # adoption decision in NOTES.md.
+        # A/B vs cache/checkpoint and the adoption decision in NOTES.md
+        # ("Minhash bucketed signature store A/B", round 10).
         import os
         import uuid
 

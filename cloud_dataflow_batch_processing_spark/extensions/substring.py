@@ -174,8 +174,9 @@ def _dup_spans(
         # sorts). Net vs 'checkpoint' at the 5M point: the join-side
         # exchange+sort of the full span frame is traded for a
         # write-side repartition that pipelines with the parquet
-        # encode. Measured A/B lives in scripts/exp_substring_bucketed
-        # .py; adoption decision recorded in NOTES.md.
+        # encode. Measured A/B and adoption decision in NOTES.md
+        # ("Substring d2 transition, third lever: bucketed span store",
+        # round 9).
         if not scratch_dir:
             raise ValueError("materialize='bucketed' needs scratch_dir")
         import os

@@ -8,6 +8,9 @@ therefore open by rotating. This script makes that mechanical:
 - names given on the command line first, in the order given — the
   queries the round touches, so the correctness gate certifies their
   changed plans in the same round,
+- then, if the window was rotated this round (the latest correctness
+  file does not hold all of it), its names in window order, so a
+  second rotation keeps the first one's picks,
 - then never-certified names (alphabetical),
 - then by least-recent certification round (ties alphabetical),
 - greedily capped so overlap with the LATEST correctness file stays
@@ -62,8 +65,10 @@ def propose(touched: list[str]) -> tuple[list[str], dict]:
     if unknown:
         raise SystemExit(f"not registered: {unknown}")
     certs, newest_names, newest_file = last_certified()
-    rest = sorted(set(names) - set(touched), key=lambda n: (certs.get(n, -1), n))
-    ranked = list(dict.fromkeys(touched)) + rest
+    rotated = not set(q.DRIVER_WINDOW) <= newest_names
+    kept = [n for n in q.DRIVER_WINDOW if rotated and n in q.REGISTRY and n not in touched]
+    rest = sorted(set(names) - set(touched) - set(kept), key=lambda n: (certs.get(n, -1), n))
+    ranked = list(dict.fromkeys(touched)) + kept + rest
     window: list[str] = []
     overlap = 0
     deferred: list[str] = []
@@ -79,6 +84,7 @@ def propose(touched: list[str]) -> tuple[list[str], dict]:
     stats = {
         "newest_file": newest_file,
         "touched": [n for n in window if n in touched],
+        "kept_from_window": [n for n in window if n in kept],
         "overlap_with_newest": overlap,
         "never_certified": [n for n in window if n not in certs],
         "deferred_for_overlap": deferred[:10],

@@ -673,3 +673,33 @@ def test_composed_pipeline_shuffle_count_is_truthful(spark, sf_dir):
         # a phantom-free count is small AND nonzero (the walk must
         # reach through the cache boundaries, not stop at the scans)
         assert 2 <= got <= budget, (name, got, budget)
+
+
+def test_dump_plans_node_counts_leave_out_aqe_stages(spark, tables):
+    """``scripts/dump_plans.py`` counts executed-plan nodes by name. The
+    AQE wrappers are left out, because how AQE cuts the same plan into
+    query stages changes run to run, so a shuffle join's counts hold no
+    ``QueryStage`` key and repeat exactly across two executions."""
+    from scripts.dump_plans import node_counts
+
+    def join():
+        li = tables["lineitem"].select(F.col("l_orderkey").alias("o_orderkey"), "l_quantity")
+        return tables["orders"].join(li, "o_orderkey").groupBy("o_orderstatus").agg(
+            F.sum("l_quantity").alias("q")
+        )
+
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        first, second = node_counts(join()), node_counts(join())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
+    assert first == second
+    assert first.get("SortMergeJoin") == 1 and first.get("Exchange", 0) >= 3, first
+    assert not [k for k in first if "QueryStage" in k or "AdaptiveSparkPlan" in k], first

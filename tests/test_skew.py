@@ -50,7 +50,8 @@ def test_salt_explode_join_matches_plain(spark, tables):
 
 
 @pytest.mark.slowsweep
-def test_dedup_lsh_adversarial_skew(spark, tmp_path):
+@pytest.mark.parametrize("materialize", ["checkpoint", "bucketed"])
+def test_dedup_lsh_adversarial_skew(spark, tmp_path, materialize):
     """Adversarial corpus for the MinHash-LSH join (VERDICT r2 #7):
 
     - 1200 identical boilerplate docs → one mega-bucket per band ABOVE
@@ -66,6 +67,11 @@ def test_dedup_lsh_adversarial_skew(spark, tmp_path):
       rows would LZ4 away below any realistic skew threshold.
     - 2 planted near-dups (Jaccard ≈ 0.97 — one appended token) among
       distinct docs → still found.
+
+    Both storage postures plan the split: ``checkpoint`` cuts the bands
+    to round-robin files, ``bucketed`` cuts the signatures to a bucketed
+    table and self-joins the bands fresh. ``None`` and ``"cache"`` find
+    the same pairs but plan no skew split.
     """
     import duckdb
 
@@ -111,11 +117,11 @@ def test_dedup_lsh_adversarial_skew(spark, tmp_path):
             "text",
             threshold=0.8,
             max_bucket_size=1000,
-            # The 100 TB posture: bands checkpointed to storage, so the
-            # self-join plans fresh exchanges — the shape AQE can split.
-            materialize="checkpoint",
+            # The 100 TB postures: bands or signatures cut to storage, so
+            # the self-join plans fresh exchanges — the shape AQE can split.
+            materialize=materialize,
             scratch_dir=str(tmp_path / "bands_ckpt"),
-            checkpoint_files=8,
+            checkpoint_files=8 if materialize == "checkpoint" else None,
         )
         spark_pdf = pairs.toPandas()
         plan = pairs._jdf.queryExecution().executedPlan().toString()

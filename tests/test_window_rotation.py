@@ -61,3 +61,41 @@ def test_window_rotated_since_last_round():
         f"the least-recently-certified registry entries. Stale names: "
         f"{sorted(overlap)[:10]}..."
     )
+
+
+EARLIER_PICKS = (
+    "ann_lsh_pairs",
+    "dedup_embedding_cosine",
+    "streaming_lsh_dedup",
+    "datastore_mutations_agg",
+)
+
+
+def _propose(monkeypatch, newest: set[str], touched: list[str]) -> list[str]:
+    """``rotate_window.propose`` with ``EARLIER_PICKS`` as the current
+    window and every other registered name certified one round before
+    them, so least-recently-certified ranking alone puts the picks last."""
+    from scripts import rotate_window
+
+    q._load_submodule_registries()
+    certs = {n: 11 for n in q.REGISTRY} | {n: 12 for n in EARLIER_PICKS}
+    monkeypatch.setattr(q, "DRIVER_WINDOW", EARLIER_PICKS)
+    monkeypatch.setattr(
+        rotate_window, "last_certified", lambda: (certs, newest, "CORRECTNESS_r12.json")
+    )
+    return rotate_window.propose(touched)[0]
+
+
+def test_second_rotation_keeps_the_rounds_earlier_picks(monkeypatch):
+    # The latest file certified two of the picks before this round
+    # touched them again; the window was rotated since, so all four stay.
+    window = _propose(monkeypatch, {"ann_lsh_pairs", "dedup_embedding_cosine"}, ["substring_dedup_stats"])
+    assert window[: 1 + len(EARLIER_PICKS)] == ["substring_dedup_stats", *EARLIER_PICKS]
+    assert len(window) == WINDOW_SIZE
+
+
+def test_rotation_at_round_start_keeps_nothing_extra(monkeypatch):
+    # The latest file holds the whole window: it was just certified.
+    window = _propose(monkeypatch, set(EARLIER_PICKS), ["substring_dedup_stats"])
+    assert window[0] == "substring_dedup_stats"
+    assert not set(EARLIER_PICKS) & set(window)
