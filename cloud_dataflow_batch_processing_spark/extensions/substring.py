@@ -359,31 +359,35 @@ def span_hashes_sql(k: int) -> str:
     )
 
 
-def _intervals_cte(source: str, k: int) -> str:
+def _spans_cte(source: str, k: int, where: str = "TRUE", prefix: str = "") -> str:
+    """CTEs ``{prefix}th_t`` and ``{prefix}spans`` (doc_id, n_tokens,
+    pos, h): every k-token span of the ``source`` rows that match
+    ``where`` — the oracle side of ``_span_frame``."""
     return f"""
-    th_t AS (
-      SELECT doc_id, {token_hashes_sql('text')} AS th FROM {source}
+    {prefix}th_t AS (
+      SELECT doc_id, {token_hashes_sql('text')} AS th FROM {source} WHERE {where}
     ),
-    spans AS (
+    {prefix}spans AS (
       SELECT doc_id, len(th) AS n_tokens, pos0 + 1 AS pos, h
       FROM (
         SELECT doc_id, th, unnest({span_hashes_sql(k)}) AS h,
                unnest(range(0, len(th) - {k - 1})) AS pos0
-        FROM th_t WHERE len(th) >= {k}
+        FROM {prefix}th_t WHERE len(th) >= {k}
       )
-    ),
-    dup AS (
-      SELECT doc_id, n_tokens, pos FROM (
-        SELECT doc_id, n_tokens, pos, COUNT(*) OVER (PARTITION BY h) AS n
-        FROM spans
-      ) WHERE n > 1
-    ),
+    )"""
+
+
+def _islands_cte(marked: str, k: int) -> str:
+    """CTE ``iv`` (doc_id, start_pos, end_pos): the marked spans of
+    ``marked`` (doc_id, pos) merged into maximal intervals — the oracle
+    side of ``_merge_marked_spans``."""
+    return f"""
     flagged AS (
       SELECT doc_id, pos,
              CASE WHEN pos - COALESCE(
                  LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos), -{k}) > {k}
              THEN 1 ELSE 0 END AS new_island
-      FROM dup
+      FROM {marked}
     ),
     islands AS (
       SELECT doc_id, pos,
@@ -397,26 +401,52 @@ def _intervals_cte(source: str, k: int) -> str:
     )"""
 
 
-def substring_dup_stats_sql(source: str = "documents", k: int = SPAN_TOKENS) -> str:
+def _intervals_cte(source: str, k: int) -> str:
+    """``iv`` over the spans whose hash occurs more than once in
+    ``source``."""
+    return f"""{_spans_cte(source, k)},
+    dup AS (
+      SELECT doc_id, n_tokens, pos FROM (
+        SELECT doc_id, n_tokens, pos, COUNT(*) OVER (PARTITION BY h) AS n
+        FROM spans
+      ) WHERE n > 1
+    ),{_islands_cte("dup", k)}"""
+
+
+def _interval_report_sql(
+    source: str,
+    where: str = "TRUE",
+    names: tuple[str, str, str] = ("n_remove_intervals", "removed_tokens", "removed_frac"),
+) -> str:
+    """The per-document report over ``iv`` for every ``source`` row
+    that matches ``where`` (zeros where it has no interval) — the
+    oracle side of ``_interval_report``: the ``per_doc`` and ``base``
+    CTEs, then the final SELECT with the interval-count, token and
+    fraction columns named ``names``."""
+    n_intervals, tokens, frac = names
     return f"""
-    WITH {_intervals_cte(source, k)},
     per_doc AS (
-      SELECT doc_id, COUNT(*) AS n_remove_intervals,
-             SUM(end_pos - start_pos) AS removed_tokens
+      SELECT doc_id, COUNT(*) AS n_intervals,
+             SUM(end_pos - start_pos) AS tokens
       FROM iv GROUP BY doc_id
     ),
     base AS (
       SELECT doc_id, len({tokens_sql('text')}) AS n_tokens FROM {source}
+      WHERE {where}
     )
     SELECT b.doc_id,
            b.n_tokens,
-           CAST(COALESCE(p.n_remove_intervals, 0) AS BIGINT) AS n_remove_intervals,
-           CAST(COALESCE(p.removed_tokens, 0) AS BIGINT) AS removed_tokens,
-           CAST(b.n_tokens - COALESCE(p.removed_tokens, 0) AS BIGINT) AS kept_tokens,
-           ROUND(CAST(COALESCE(p.removed_tokens, 0) AS DOUBLE) / b.n_tokens, 4)
-             AS removed_frac
+           CAST(COALESCE(p.n_intervals, 0) AS BIGINT) AS {n_intervals},
+           CAST(COALESCE(p.tokens, 0) AS BIGINT) AS {tokens},
+           CAST(b.n_tokens - COALESCE(p.tokens, 0) AS BIGINT) AS kept_tokens,
+           ROUND(CAST(COALESCE(p.tokens, 0) AS DOUBLE) / b.n_tokens, 4)
+             AS {frac}
     FROM base b LEFT JOIN per_doc p USING (doc_id)
     """
+
+
+def substring_dup_stats_sql(source: str = "documents", k: int = SPAN_TOKENS) -> str:
+    return f"WITH {_intervals_cte(source, k)},{_interval_report_sql(source)}"
 
 
 def substring_dedup_text_sql(source: str = "documents", k: int = SPAN_TOKENS) -> str:
@@ -502,68 +532,14 @@ def incremental_substring_stats_sql(
     """Oracle twin over one relation split by predicates into the new
     batch and the old corpus."""
     return f"""
-    WITH old_th AS (
-      SELECT doc_id, {token_hashes_sql('text')} AS th FROM {source} WHERE {old_where}
-    ),
-    store AS (
-      SELECT h, COUNT(*) AS cnt FROM (
-        SELECT unnest({span_hashes_sql(k)}) AS h FROM old_th WHERE len(th) >= {k}
-      ) GROUP BY h
-    ),
-    new_th AS (
-      SELECT doc_id, {token_hashes_sql('text')} AS th FROM {source} WHERE {new_where}
-    ),
-    spans AS (
-      SELECT doc_id, len(th) AS n_tokens, pos0 + 1 AS pos, h
-      FROM (
-        SELECT doc_id, th, unnest({span_hashes_sql(k)}) AS h,
-               unnest(range(0, len(th) - {k - 1})) AS pos0
-        FROM new_th WHERE len(th) >= {k}
-      )
-    ),
-    batch_dups AS (
-      SELECT h FROM spans GROUP BY h HAVING COUNT(*) > 1
-    ),
+    WITH {_spans_cte(source, k, old_where, prefix="old_")},{_spans_cte(source, k, new_where)},
     dup_hashes AS (
-      SELECT h FROM batch_dups UNION SELECT h FROM store
+      SELECT h FROM spans GROUP BY h HAVING COUNT(*) > 1
+      UNION SELECT h FROM old_spans
     ),
     dup AS (
       SELECT doc_id, n_tokens, pos FROM spans WHERE h IN (SELECT h FROM dup_hashes)
-    ),
-    flagged AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos - COALESCE(
-                 LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos), -{k}) > {k}
-             THEN 1 ELSE 0 END AS new_island
-      FROM dup
-    ),
-    islands AS (
-      SELECT doc_id, pos,
-             SUM(new_island) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-      FROM flagged
-    ),
-    iv AS (
-      SELECT doc_id, MIN(pos) AS start_pos, MAX(pos) + {k} AS end_pos
-      FROM islands GROUP BY doc_id, island
-    ),
-    per_doc AS (
-      SELECT doc_id, COUNT(*) AS n_remove_intervals,
-             SUM(end_pos - start_pos) AS removed_tokens
-      FROM iv GROUP BY doc_id
-    ),
-    base AS (
-      SELECT doc_id, len({tokens_sql('text')}) AS n_tokens FROM {source}
-      WHERE {new_where}
-    )
-    SELECT b.doc_id, b.n_tokens,
-           CAST(COALESCE(p.n_remove_intervals, 0) AS BIGINT) AS n_remove_intervals,
-           CAST(COALESCE(p.removed_tokens, 0) AS BIGINT) AS removed_tokens,
-           CAST(b.n_tokens - COALESCE(p.removed_tokens, 0) AS BIGINT) AS kept_tokens,
-           ROUND(CAST(COALESCE(p.removed_tokens, 0) AS DOUBLE) / b.n_tokens, 4)
-             AS removed_frac
-    FROM base b LEFT JOIN per_doc p USING (doc_id)
-    """
+    ),{_islands_cte("dup", k)},{_interval_report_sql(source, new_where)}"""
 
 
 def decontaminate_span_stats(
@@ -624,57 +600,13 @@ def decontaminate_span_stats_sql(
 ) -> str:
     """Oracle twin over one relation split by predicates into the
     training corpus and the held-out eval set."""
+    names = ("n_contam_intervals", "contaminated_tokens", "contaminated_frac")
     return f"""
-    WITH th_t AS (
-      SELECT doc_id, {token_hashes_sql('text')} AS th FROM {source}
-    ),
-    spans AS (
-      SELECT doc_id, len(th) AS n_tokens, pos0 + 1 AS pos, h
-      FROM (
-        SELECT doc_id, th, unnest({span_hashes_sql(k)}) AS h,
-               unnest(range(0, len(th) - {k - 1})) AS pos0
-        FROM th_t WHERE len(th) >= {k}
-      )
-    ),
+    WITH {_spans_cte(source, k)},
     ev AS (
       SELECT DISTINCT h FROM spans WHERE {eval_where}
     ),
     hit AS (
       SELECT doc_id, n_tokens, pos FROM spans
       WHERE ({corpus_where}) AND h IN (SELECT h FROM ev)
-    ),
-    flagged AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos - COALESCE(
-                 LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos), -{k}) > {k}
-             THEN 1 ELSE 0 END AS new_island
-      FROM hit
-    ),
-    islands AS (
-      SELECT doc_id, pos,
-             SUM(new_island) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-      FROM flagged
-    ),
-    iv AS (
-      SELECT doc_id, MIN(pos) AS start_pos, MAX(pos) + {k} AS end_pos
-      FROM islands GROUP BY doc_id, island
-    ),
-    per_doc AS (
-      SELECT doc_id, COUNT(*) AS n_contam_intervals,
-             SUM(end_pos - start_pos) AS contaminated_tokens
-      FROM iv GROUP BY doc_id
-    ),
-    base AS (
-      SELECT doc_id, len({tokens_sql('text')}) AS n_tokens FROM {source}
-      WHERE {corpus_where}
-    )
-    SELECT b.doc_id, b.n_tokens,
-           CAST(COALESCE(p.n_contam_intervals, 0) AS BIGINT) AS n_contam_intervals,
-           CAST(COALESCE(p.contaminated_tokens, 0) AS BIGINT) AS contaminated_tokens,
-           CAST(b.n_tokens - COALESCE(p.contaminated_tokens, 0) AS BIGINT)
-             AS kept_tokens,
-           ROUND(CAST(COALESCE(p.contaminated_tokens, 0) AS DOUBLE) / b.n_tokens, 4)
-             AS contaminated_frac
-    FROM base b LEFT JOIN per_doc p USING (doc_id)
-    """
+    ),{_islands_cte("hit", k)},{_interval_report_sql(source, corpus_where, names)}"""

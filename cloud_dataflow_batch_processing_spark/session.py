@@ -38,6 +38,19 @@ over 31 GiB, or java options in ``PYSPARK_SUBMIT_ARGS`` keep CDS off
 too. Then, and when the caller passes its own ``-Xshare`` or archive
 flag, the JVM starts exactly as without the archive. ``cds_state``
 reports which happened.
+
+Python workers. Spark puts ``$SPARK_HOME/python/lib/pyspark.zip``
+first on every Python worker's ``PYTHONPATH`` and starts each task with
+``importlib.invalidate_caches()``, which on CPython 3.10-3.12 re-reads
+the zip's directory (1,328 entries) once for each of its 14-16
+importers: 75-190 ms per task. So on a local master, where the workers
+run where this package's path exists, ``get_spark`` sets
+``spark.python.daemon.module`` to ``worker_daemon``, which re-reads a
+zip only when it changed, and appends the package's parent directory to
+the workers' ``PYTHONPATH`` (after the caller's
+``spark.executorEnv.PYTHONPATH``), so package UDFs import whatever the
+driver's working directory. A caller's own daemon module wins; other
+masters keep Spark's daemon. CPython 3.13 reads zip directories lazily.
 """
 
 from __future__ import annotations
@@ -81,6 +94,11 @@ _COMPRESSED_OOPS_MAX_MIB = 31 * 1024
 _ARCHIVE = "driver.jsa"
 # Dumping the archive takes 35-45 s of one core on a 4-CPU box.
 _DUMP_WAIT_S = 300
+
+# Python workers on a local master run this daemon; the package's parent
+# directory goes on their PYTHONPATH.
+_WORKER_DAEMON = "cloud_dataflow_batch_processing_spark.worker_daemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _launch_lock = threading.Lock()
 _launched: tuple[object, ColdStart] | None = None  # (gateway, how it started) of the JVM get_spark launched
@@ -346,6 +364,20 @@ def _remove(path: str) -> None:
         pass
 
 
+def worker_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """The Python-worker conf ``get_spark`` sets on a local master: the
+    daemon module (the caller's, if it passes one) and the workers'
+    ``PYTHONPATH``, the caller's value with the package's parent
+    directory appended. Other masters get none."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    paths = [extra_conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT]
+    return {
+        "spark.python.daemon.module": extra_conf.get("spark.python.daemon.module", _WORKER_DAEMON),
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(filter(None, paths)),
+    }
+
+
 def get_spark(
     app_name: str = "cloud-dataflow-batch-processing-spark",
     master: str | None = None,
@@ -387,9 +419,10 @@ def get_spark(
         for k, v in (extra_conf or {}).items():
             active.conf.set(k, v)
         return active
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -404,7 +437,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**(extra_conf or {}), **worker_conf(master, extra_conf or {})}.items():
         builder = builder.config(k, v)
     with _launch_lock:
         launch = None
