@@ -18,7 +18,7 @@ import argparse
 import sys
 
 from cloud_dataflow_batch_processing_spark.schema import bq_schema_file_to_struct
-from cloud_dataflow_batch_processing_spark.session import cds_state, get_spark
+from cloud_dataflow_batch_processing_spark.session import cds_state, get_spark, worker_pyspark
 from cloud_dataflow_batch_processing_spark.workload import run_reference_pipeline
 
 
@@ -37,10 +37,11 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def _session(app_name: str, master: str | None):
-    """The tuned session; how its driver JVM started goes to stderr, so
-    stdout's last line stays the command's result."""
+    """The tuned session; how its driver JVM started and where its
+    Python workers import pyspark from go to stderr, so stdout's last
+    line stays the command's result."""
     spark = get_spark(app_name=app_name, master=master)
-    print(f"cold start: {cds_state(spark)}", file=sys.stderr)
+    print(f"cold start: {cds_state(spark)}; workers: {worker_pyspark(spark)}", file=sys.stderr)
     return spark
 
 

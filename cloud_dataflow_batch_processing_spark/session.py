@@ -39,35 +39,50 @@ too. Then, and when the caller passes its own ``-Xshare`` or archive
 flag, the JVM starts exactly as without the archive. ``cds_state``
 reports which happened.
 
-Python workers. Spark puts ``$SPARK_HOME/python/lib/pyspark.zip``
-first on every Python worker's ``PYTHONPATH`` and starts each task with
+While that JVM starts, the main thread mostly waits for it. PySpark
+then imports, on the main thread, ``pyspark.testing.utils`` (with
+pandas and pyarrow, 0.3 s) on the first Py4J call that has arguments,
+and IPython (0.3-0.4 s, when installed) on the first DataFrame call
+while ``spark.python.sql.dataFrameDebugging.enabled`` is on, as it is
+by default. So a launch imports them on a thread during
+``getOrCreate`` and joins it before ``get_spark`` returns.
+
+Python workers. On a local master, where the workers run where this
+package's path exists, ``get_spark`` sets
+``spark.python.daemon.module`` to ``cdbp_worker_daemon`` and appends
+the package's parent directory and the daemon's own directory to the
+workers' ``PYTHONPATH`` (after the caller's
+``spark.executorEnv.PYTHONPATH``), so package UDFs import whatever the
+driver's working directory. Spark puts ``pyspark.zip``, which holds no
+``.pyc``, first on that path: a daemon importing pyspark from it
+compiles it, 1.2-1.5 s. The daemon imports the installed, compiled
+pyspark and py4j instead when they hold the zips' sources
+(``worker_pyspark`` reports which). And since every task starts with
 ``importlib.invalidate_caches()``, which on CPython 3.10-3.12 re-reads
 the zip's directory (1,328 entries) once for each of its 14-16
-importers: 75-190 ms per task. So on a local master, where the workers
-run where this package's path exists, ``get_spark`` sets
-``spark.python.daemon.module`` to ``worker_daemon``, which re-reads a
-zip only when it changed, and appends the package's parent directory to
-the workers' ``PYTHONPATH`` (after the caller's
-``spark.executorEnv.PYTHONPATH``), so package UDFs import whatever the
-driver's working directory. A caller's own daemon module wins; other
-masters keep Spark's daemon. CPython 3.13 reads zip directories lazily.
+importers (75-190 ms per task), the daemon re-reads a zip only when it
+changed. A caller's own daemon module wins; other masters keep Spark's
+daemon.
 """
 
 from __future__ import annotations
 
 import atexit
+import importlib
 import os
 import re
 import shutil
 import subprocess
 import sys
 import threading
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, replace
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from cloud_dataflow_batch_processing_spark.worker import cdbp_worker_daemon as worker_daemon
 
 # Environment the Spark launcher puts on the driver classpath. A live
 # directory breaks CDS, and a changed classpath invalidates the archive.
@@ -96,9 +111,13 @@ _ARCHIVE = "driver.jsa"
 _DUMP_WAIT_S = 300
 
 # Python workers on a local master run this daemon; the package's parent
-# directory goes on their PYTHONPATH.
-_WORKER_DAEMON = "cloud_dataflow_batch_processing_spark.worker_daemon"
+# directory and the daemon's go on their PYTHONPATH.
+_WORKER_DAEMON = "cdbp_worker_daemon"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_DIR = os.path.dirname(os.path.abspath(worker_daemon.__file__))
+# Modules PySpark imports on the main thread once the JVM is up; a launch
+# imports them while the JVM starts.
+_LAZY_IMPORTS = ("pyspark.testing.utils", "IPython", "ipykernel")
 
 _launch_lock = threading.Lock()
 _launched: tuple[object, ColdStart] | None = None  # (gateway, how it started) of the JVM get_spark launched
@@ -368,14 +387,47 @@ def worker_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
     """The Python-worker conf ``get_spark`` sets on a local master: the
     daemon module (the caller's, if it passes one) and the workers'
     ``PYTHONPATH``, the caller's value with the package's parent
-    directory appended. Other masters get none."""
+    directory and the daemon's directory appended. Other masters get
+    none."""
     if master != "local" and not master.startswith("local["):
         return {}
-    paths = [extra_conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT]
+    paths = [extra_conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT, _WORKER_DIR]
     return {
         "spark.python.daemon.module": extra_conf.get("spark.python.daemon.module", _WORKER_DAEMON),
         "spark.executorEnv.PYTHONPATH": os.pathsep.join(filter(None, paths)),
     }
+
+
+def worker_pyspark(spark: SparkSession) -> str:
+    """Where this session's Python workers import pyspark from:
+    ``compiled`` (the installed packages) or ``zip:<reason>``, by the
+    rule ``cdbp_worker_daemon`` applies to Spark's worker path and this
+    interpreter's ``sys.path``; ``zip:spark-daemon`` when the workers
+    run another daemon."""
+    if spark.sparkContext.getConf().get("spark.python.daemon.module") != _WORKER_DAEMON:
+        return "zip:spark-daemon"
+    zips = spark.sparkContext._jvm.org.apache.spark.api.python.PythonUtils.sparkPythonPath()
+    return worker_daemon.worker_path(zips.split(os.pathsep) + sys.path)[0]
+
+
+@contextmanager
+def _importing(modules: tuple[str, ...]):
+    """Import ``modules`` on a thread while the body runs, and join it;
+    a module that is not installed is skipped."""
+
+    def run() -> None:
+        for name in modules:
+            try:
+                importlib.import_module(name)
+            except ImportError:
+                pass
+
+    thread = threading.Thread(target=run, name="get_spark-imports", daemon=True)
+    thread.start()
+    try:
+        yield
+    finally:
+        thread.join()
 
 
 def get_spark(
@@ -447,7 +499,7 @@ def get_spark(
             launch = plan_cold_start(conf, _find_spark_home(), _java_home())
             if launch.java_options:
                 builder = builder.config("spark.driver.extraJavaOptions", launch.java_options)
-        with _spark_conf_dir(launch and launch.conf_dir):
+        with _spark_conf_dir(launch and launch.conf_dir), _importing(_LAZY_IMPORTS) if launch else nullcontext():
             spark = builder.getOrCreate()
         if launch is not None:
             _record_launch(spark, launch)

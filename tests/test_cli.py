@@ -7,6 +7,7 @@ import json
 import os
 
 from cloud_dataflow_batch_processing_spark.cli import run
+from cloud_dataflow_batch_processing_spark.session import worker_pyspark
 from tests.test_schema import NYC_FIELDS
 
 
@@ -35,7 +36,8 @@ def test_cli_runs_reference_pipeline(spark, tmp_path, capsys):
     )
     captured = capsys.readouterr()
     assert captured.out.splitlines()[-1] == "raw rows written: 6; groups written: 2"
-    assert "cold start: " in captured.err
+    cold_start = next(line for line in captured.err.splitlines() if line.startswith("cold start: "))
+    assert cold_start.split("; workers: ")[1] == worker_pyspark(spark)
     t = spark.read.parquet(os.path.join(wh, "nyc", "t_transform"))
     got = {r.neighbourhood: r.count_listings for r in t.collect()}
     assert got == {"A": str(0 + 2 + 4), "B": str(1 + 3 + 5)}

@@ -1,6 +1,7 @@
-"""The Python worker daemon of local masters (worker_daemon.py): a zip
-is re-read only when it changed, the suite's workers run the daemon,
-and package UDFs run whatever the driver's working directory."""
+"""The Python worker daemon of local masters (cdbp_worker_daemon.py):
+it imports the installed pyspark only when it holds the zips' sources,
+a zip is re-read only when it changed, the suite's workers run the
+daemon, and package UDFs run whatever the driver's working directory."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ import zipimport
 import pytest
 
 from cloud_dataflow_batch_processing_spark import session as S
-from cloud_dataflow_batch_processing_spark import worker_daemon as W
+from cloud_dataflow_batch_processing_spark.worker import cdbp_worker_daemon as W
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -64,16 +65,62 @@ def test_missing_zip_leaves_the_importer_empty(zip_path):
     assert zip_path not in zipimport._zip_directory_cache
 
 
+@pytest.fixture
+def spark_zip(tmp_path):
+    """A fake ``pyspark.zip`` and, in ``site``, an installed twin of it
+    without its ``tests`` package (as wheels ship pyspark)."""
+    sources = {
+        "pyspark/__init__.py": "V = 1\n",
+        "pyspark/sql/types.py": "T = 2\n",
+        "pyspark/tests/test_a.py": "A = 3\n",
+    }
+    archive = str(tmp_path / "pyspark.zip")
+    _write_zip(archive, sources)
+    site = tmp_path / "site"
+    for name, text in sources.items():
+        if "/tests/" not in name:
+            (site / name).parent.mkdir(parents=True, exist_ok=True)
+            (site / name).write_text(text)
+    yield archive, str(site)
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_installed_twin_of_the_zip_goes_first(spark_zip):
+    archive, site = spark_zip
+    assert W.worker_path([archive, "/no/such/dir", site]) == ("compiled", ["/no/such/dir", site, archive])
+
+
+def test_one_changed_byte_keeps_the_zip_first(spark_zip):
+    archive, site = spark_zip
+    with open(os.path.join(site, "pyspark", "sql", "types.py"), "w") as fh:
+        fh.write("T = 3\n")
+    assert W.worker_path([archive, site]) == ("zip:pyspark-differs", [archive, site])
+
+
+def test_a_module_missing_beside_installed_ones_keeps_the_zip_first(spark_zip):
+    archive, site = spark_zip
+    os.remove(os.path.join(site, "pyspark", "sql", "types.py"))
+    assert W.worker_path([archive, site]) == ("zip:pyspark-differs", [archive, site])
+
+
+def test_no_installed_package_keeps_the_zip_first(spark_zip, tmp_path):
+    archive, _ = spark_zip
+    empty = str(tmp_path / "empty")
+    os.mkdir(empty)
+    assert W.worker_path([archive, empty]) == ("zip:pyspark-not-installed", [archive, empty])
+
+
 def test_worker_conf_only_on_local_masters_and_the_caller_wins():
+    worker_dir = os.path.join(ROOT, "cloud_dataflow_batch_processing_spark", "worker")
     assert S.worker_conf("local[4]", {}) == {
         "spark.python.daemon.module": S._WORKER_DAEMON,
-        "spark.executorEnv.PYTHONPATH": ROOT,
+        "spark.executorEnv.PYTHONPATH": f"{ROOT}{os.pathsep}{worker_dir}",
     }
     assert S.worker_conf("local", {})["spark.python.daemon.module"] == S._WORKER_DAEMON
     caller = {"spark.python.daemon.module": "my.daemon", "spark.executorEnv.PYTHONPATH": "extra/libs"}
     assert S.worker_conf("local[*]", caller) == {
         "spark.python.daemon.module": "my.daemon",
-        "spark.executorEnv.PYTHONPATH": f"extra/libs{os.pathsep}{ROOT}",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(["extra/libs", ROOT, worker_dir]),
     }
     for master in ("yarn", "spark://host:7077", "local-cluster[2,1,1024]", "k8s://https://host:443"):
         assert S.worker_conf(master, caller) == {}
@@ -82,7 +129,10 @@ def test_worker_conf_only_on_local_masters_and_the_caller_wins():
 def test_suite_workers_run_the_daemon_and_keep_the_pyspark_zip_read(spark):
     """The suite's session comes from get_spark on a local master. In a
     worker, two invalidations leave every pyspark zip importer's
-    directory the same object (the stock one re-reads it each time)."""
+    directory the same object (the stock one re-reads it each time),
+    and pyspark is the installed one whenever its sources match the
+    zip's."""
+    import pyspark
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
@@ -93,6 +143,7 @@ def test_suite_workers_run_the_daemon_and_keep_the_pyspark_zip_read(spark):
         import zipimport
 
         import pandas as pd
+        import pyspark
 
         def importers():
             return [
@@ -104,15 +155,19 @@ def test_suite_workers_run_the_daemon_and_keep_the_pyspark_zip_read(spark):
         before = importers()
         importlib.invalidate_caches()
         kept = bool(before) and all(imp._files is files for imp, files in before)
-        return pd.Series([f"{sys.modules['__main__'].__spec__.name} {len(before)} {kept}"] * len(ids))
+        report = f"{sys.modules['__main__'].__spec__.name} {len(before)} {kept} {pyspark.__file__}"
+        return pd.Series([report] * len(ids))
 
     assert spark.conf.get("spark.python.daemon.module") == S._WORKER_DAEMON
     reports = {r[0] for r in spark.range(4).repartition(2).select(probe(F.col("id"))).collect()}
+    compiled = S.worker_pyspark(spark) == "compiled"
     for report in reports:
-        main, importers, kept = report.split()
+        main, importers, kept, pyspark_file = report.split(maxsplit=3)
         assert main == S._WORKER_DAEMON
-        assert int(importers) > 1
+        assert int(importers) >= 1 if compiled else int(importers) > 1  # one per package imported from the zip
         assert kept == "True"
+        assert (pyspark_file == pyspark.__file__) is compiled
+        assert ("pyspark.zip" in pyspark_file) is not compiled
 
 
 @pytest.mark.slowsweep
