@@ -31,8 +31,7 @@ def scale_bench(spark) -> dict:
     headliners on a 50k-doc corpus (~10x sf0.1's documents table),
     generated deterministically into .bench_data/ — one order of
     magnitude of real headroom evidence for the 100 TB posture, run
-    with the checkpoint materialization mode (the fault-isolation
-    posture a real corpus needs). DuckDB runs the registry's own oracle
+    with the default (cached) stores. DuckDB runs the registry's own oracle
     SQL on the same parquet for the 2x bar, and the pair sets are
     compared so the scale point is correctness-checked, not just
     timed."""
@@ -50,15 +49,11 @@ def scale_bench(spark) -> dict:
 
     base = os.path.dirname(os.path.abspath(__file__))
     path = ensure_scale_docs(os.path.join(base, ".bench_data", "sf1_docs"))
-    scratch = os.path.join(base, ".bench_data", "dedup_ckpt")
     docs = spark.read.parquet(path)
     n_rows = docs.count()
 
     def dedup_q():
-        return D.minhash_near_dup_pairs(
-            docs, "doc_id", "text", threshold=0.8,
-            materialize="checkpoint", scratch_dir=scratch,
-        )
+        return D.minhash_near_dup_pairs(docs, "doc_id", "text", threshold=0.8)
 
     def clean_q():
         dropped = dedup_q().select(F.col("doc_b").alias("doc_id")).distinct()
@@ -148,7 +143,7 @@ def scale_bench(spark) -> dict:
         "ivf_index": _soft(_ivf_scale_point),
         "rows": n_rows,
         "sf_equiv": 1.0,
-        "materialize": "checkpoint",
+        "materialize": "cache",
         "n_near_dup_pairs": len(spark_pairs),
         "pairs_match_oracle": spark_pairs == duck_pairs,
         "substring_match_oracle": spark_sub == duck_sub,

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from cloud_dataflow_batch_processing_spark.caching import managed_cache
+from cloud_dataflow_batch_processing_spark.caching import managed_cache, managed_store
 from cloud_dataflow_batch_processing_spark.functions.text import (
     HASH_MOD as M,
     HASH_MULT,
@@ -140,10 +140,7 @@ def minhash_near_dup_pairs(
     text_col: str,
     threshold: float = 0.8,
     max_bucket_size: int = 1000,
-    fast_hashing: bool = True,
-    materialize: str = "cache",
     scratch_dir: str | None = None,
-    checkpoint_files: int | None = None,
     th_col: str | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline:
@@ -156,94 +153,38 @@ def minhash_near_dup_pairs(
     boilerplate) before the join — at 100 TB a single mega-bucket would
     otherwise produce a quadratic pair blowup.
 
-    ``fast_hashing`` (the default) runs the token-hash stage as the
-    Arrow-batched pandas_udf twin (``functions/text_fast.py``) — ~27%
-    faster cold at sf0.1 and the gap widens with document length, so
-    it is the production path for large corpora. ``fast_hashing=False``
-    keeps the pure-Column HOF fold (interpreted, JVM-only) as the
-    oracle-reference variant; both compute bit-identical values, so
-    the same DuckDB oracle verifies either path and bench carries both.
+    The token-hash stage is the Arrow-batched twin
+    (``functions/text_fast.py``), value-identical to the Column
+    ``token_hashes`` fold, so the same DuckDB oracle verifies it;
+    ``th_col`` names already-computed hashes to use instead.
 
-    ``materialize`` picks how the guarded bands frame is held for its
-    self-join (results identical; plan shape differs). In every mode
-    the self-join plans fresh (band_id, bh) exchanges on both sides —
-    the shape AQE's OptimizeSkewedJoin can split:
-
-    - ``"cache"`` (default, right at bench/iterative scale): executor
-      cache — repeated invocations in one session scan the cache
-      instead of recomputing the hash pipeline.
-    - ``"checkpoint"`` (the 100 TB fault-isolation posture): write the
-      guarded bands to ``scratch_dir`` parquet and re-read — a
-      corpus-scale frame won't fit in cache, and the lineage cut
-      survives executor loss (test_dedup_lsh_adversarial_skew drives
-      this mode and pins the AQE skew split).
-      ``checkpoint_files`` round-robins the write into that many files:
-      skew-splitting a reduce partition works by regrouping MAP-side
-      blocks, so every band bucket must span multiple checkpoint files
-      (round-robin guarantees it; hash layout would put a hot bucket in
-      ONE file and make its reduce partition unsplittable). It also
-      bounds file count/size, which is how you'd size a 100 TB scratch
-      dataset anyway.
-    - ``None``: no explicit materialization — the two self-join sides
-      are identical subplans, so ReuseExchange serves both from ONE
-      shuffle write (the shuffle itself is the materialization point).
-      The fastest one-shot plan at sf0.1; right whenever the job runs
-      the pipeline once and executor loss can rerun the stage.
-    - ``"bucketed"`` (VERDICT r9 #6): persist the SIGNATURE frame as a
-      parquet table bucketed+sorted by ``__id``; both wide fetch joins
-      then inherit the bucket distribution and never re-exchange the
-      shingle arrays, and the store is reusable across invocations
-      (the incremental/repeated-dedup path). Bands take the
-      ReuseExchange posture. A/B vs cache/checkpoint at 500k/5M in
-      NOTES.md ("Minhash bucketed signature store A/B", round 10).
+    The signature frame is stored by ``caching.managed_store``'s rule.
+    With no ``scratch_dir`` it and the guarded bands are cached, so
+    repeated invocations in one session scan the cache instead of
+    recomputing the hash pipeline. With a ``scratch_dir`` (the corpus
+    scale posture, VERDICT r9 #6) the signatures become a parquet table
+    bucketed and sorted by ``__id``: both wide fetch joins inherit the
+    bucket distribution and never re-exchange the shingle arrays, the
+    lineage is cut to durable storage, and the narrow bands self-join
+    plans fresh (band_id, bh) exchanges on both sides — the shape AQE's
+    OptimizeSkewedJoin can split (test_dedup_lsh_adversarial_skew).
+    A/Bs in NOTES.md ("Minhash bucketed signature store A/B", round 10;
+    "One storage rule for the dedup stores", round 13).
     """
     # Staged plan — each expensive array is computed once per row:
-    #   stage 1: char-fold token hashes   (the dominant cost)
+    #   stage 1: token hashes             (the dominant cost)
     #   stage 2: shingle combination
     #   stage 3: 16 minhash lanes + distinct shingle set
-    # then cache: the band explosion, bucket sizing, and the pair join
+    # then store: the band explosion, bucket sizing, and the pair join
     # all reuse the signature frame instead of recomputing it 6x.
-    sig_frame = minhash_signatures(df, id_col, text_col, fast_hashing, th_col=th_col)
-    if materialize == "bucketed":
-        # VERDICT r9 #6: persist the SIGNATURE store bucketed (and
-        # sorted) by __id — the two wide fetch joins below then consume
-        # the store's bucket distribution, so the shingle arrays never
-        # re-exchange (the narrow candidate side co-partitions to the
-        # bucket count instead). Mirrors substring.py's span store;
-        # A/B vs cache/checkpoint and the adoption decision in NOTES.md
-        # ("Minhash bucketed signature store A/B", round 10).
-        import os
-        import uuid
-
-        from cloud_dataflow_batch_processing_spark.caching import (
-            register_managed_scratch,
-            register_managed_table,
-        )
-
-        spark = df.sparkSession
-        tag = uuid.uuid4().hex[:12]
-        path = register_managed_scratch(
-            spark,
-            os.path.join(scratch_dir or "spark-warehouse/dedup_sigs_bkt", tag),
-        )
-        name = register_managed_table(spark, f"sigs_bkt_{tag}")
-        nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        (
-            sig_frame.repartition(nb, "__id")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(nb, "__id")
-            .sortBy("__id")
-            .option("path", path)
-            .saveAsTable(name)
-        )
-        base = spark.table(name)
-    else:
-        base = managed_cache(sig_frame)
+    base = managed_store(
+        minhash_signatures(df, id_col, text_col, th_col=th_col),
+        "__id", scratch_dir, "sigs_bkt",
+    )
     sig_cols = [f"mh{j}" for j in range(NUM_HASHES)]
-    # ONE scan of the cached signature frame: explode an inline array of
+    # ONE scan of the signature store: explode an inline array of
     # (band_id, band_hash) structs — the 4-way union formulation scans
-    # the cache once per band (4x the read at 100 TB) for the same rows.
+    # the store once per band (4x the read at 100 TB) for the same rows.
     band_structs = F.array(
         *[
             F.struct(F.lit(b).alias("band_id"), band_hash(sig_cols, b).alias("bh"))
@@ -278,49 +219,14 @@ def minhash_near_dup_pairs(
         .filter(F.col("__n") > max_bucket_size)
         .select("band_id", "bh")
     )
-    guarded = bands.join(
-        F.broadcast(oversized), on=["band_id", "bh"], how="left_anti"
-    )
-    if materialize == "cache":
-        bands = managed_cache(guarded)
-    elif materialize == "checkpoint":
-        import os
-        import uuid
-
-        from cloud_dataflow_batch_processing_spark.caching import (
-            register_managed_scratch,
-        )
-
-        path = os.path.join(
-            scratch_dir or "spark-warehouse/dedup_bands_ckpt", uuid.uuid4().hex[:12]
-        )
-        # Scratch follows the managed-cache lifecycle: the next
-        # release_managed_caches() deletes it, so repeated invocations
-        # in a long session never accumulate orphan checkpoint dirs
-        # (the caller just consumes the result before releasing, same
-        # contract as the cache mode above).
-        register_managed_scratch(df.sparkSession, path)
-        to_write = guarded.repartition(checkpoint_files) if checkpoint_files else guarded
-        to_write.write.mode("overwrite").parquet(os.path.join(path, "bands"))
-        bands = df.sparkSession.read.parquet(os.path.join(path, "bands"))
-        # The fault-isolation posture covers the verify stage too: the
-        # signature frame (one copy of each shingle array — vs the
-        # NUM_BANDS copies the wide-bands layout used to checkpoint) is
-        # cut to storage so the pair fetch below never re-runs the hash
-        # pipeline after executor loss.
-        sigs.write.mode("overwrite").parquet(os.path.join(path, "sigs"))
-        sigs = df.sparkSession.read.parquet(os.path.join(path, "sigs"))
-    elif materialize == "bucketed":
-        # Bands are a NARROW projection of the bucketed signature scan
-        # (ids + 4 band hashes); the self-join's two sides are identical
-        # subplans, so ReuseExchange serves both from one shuffle write
-        # — same posture as materialize=None. The expensive state (the
-        # hash pipeline + shingle arrays) is already cut to the store.
-        bands = guarded
-    elif materialize is None:
-        bands = guarded
-    else:
-        raise ValueError(f"unknown materialize mode {materialize!r}")
+    bands = bands.join(F.broadcast(oversized), on=["band_id", "bh"], how="left_anti")
+    if scratch_dir is None:
+        bands = managed_cache(bands)
+    # With the bucketed store, bands are a NARROW projection of its
+    # scan (ids + 4 band hashes); the self-join's two sides are
+    # identical subplans, so ReuseExchange serves both from one shuffle
+    # write. The expensive state (the hash pipeline + shingle arrays)
+    # is already cut to the store.
 
     a, b_ = bands.alias("a"), bands.alias("b")
     # Dedup-then-fetch-then-verify (round 8; supersedes both prior
@@ -335,7 +241,7 @@ def minhash_near_dup_pairs(
     #     survivors) shuffled almost nothing but recomputed the
     #     array_intersect per band-duplicated candidate (<= NUM_BANDS
     #     times per pair) and dragged the arrays through the band
-    #     explosion, the checkpoint (4x each array), and the
+    #     explosion, the band materialization (4x each array), and the
     #     self-join's exchange/broadcast — measured +47% warm at the
     #     50k bench corpus (same-session interleaved A/B, NOTES.md).
     # This order's wide data volume is O(corpus) — the signature frame
@@ -374,7 +280,7 @@ def minhash_near_dup_pairs(
         ).hint("shuffle_hash"),
         on="doc_b",
     )
-    # __sh is a DISTINCT set (array_distinct at :213), so the
+    # __sh is a DISTINCT set (array_distinct in minhash_signatures), so the
     # hash-lookup array_intersect is exactly the HOF
     # filter/array_contains fold — but O(|a|+|b|) per pair instead of
     # O(|a|*|b|), which matters precisely when bucket collisions make
@@ -879,7 +785,6 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    fast_hashing: bool = True,
     th_col: str | None = None,
 ) -> DataFrame:
     """The signature-store frame: (__id, __sh distinct-shingle set,
@@ -910,14 +815,12 @@ def minhash_signatures(
     contract; the Arrow tokenize node simply drops out of the plan."""
     if th_col is not None:
         th_expr = F.col(th_col)
-    elif fast_hashing:
+    else:
         from cloud_dataflow_batch_processing_spark.functions.text_fast import (
             token_hashes_fast,
         )
 
         th_expr = token_hashes_fast(F.col(text_col))
-    else:
-        th_expr = token_hashes(text_col)
     th_df = df.select(F.col(id_col).alias("__id"), th_expr.alias("__th"))
     sh_df = th_df.select("__id", shingles_from_token_hashes(F.col("__th")).alias("__shl"))
     return sh_df.select(

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from cloud_dataflow_batch_processing_spark.caching import managed_store
 from cloud_dataflow_batch_processing_spark.extensions.dedup import token_hashes_sql
 from cloud_dataflow_batch_processing_spark.functions.text import (
     HASH_MOD,
@@ -110,13 +111,20 @@ def _dup_spans(
     id_col: str,
     text_col: str,
     k: int,
-    materialize: str = "cache",
     scratch_dir: str | None = None,
     th_col: str | None = None,
 ) -> DataFrame:
     """(doc_id, n_tokens, pos) for every K-token span whose hash occurs
     >1 time corpus-wide (counting within-document repeats, per the
-    paper: ANY second occurrence marks the span)."""
+    paper: ANY second occurrence marks the span).
+
+    The span frame is stored once (``caching.managed_store``), or the
+    count side and the probe side would each recompute the UDF chain:
+    cached with no ``scratch_dir``; with one, bucketed and sorted by
+    the span hash (VERDICT r8 #6). Then the dup-count groupBy and the
+    dup semi-join both consume the bucket distribution: NEITHER side
+    of the join exchanges, and the only span-volume shuffle is the
+    repartition folded into the write (NOTES r9, r13)."""
     if th_col is None:
         # The span-hash stage runs where the scan runs: a corpus read
         # from fewer splits than cores (one small file at bench scale)
@@ -125,7 +133,9 @@ def _dup_spans(
         # already exceed the core count, and for frames downstream of
         # a wide node.
         df = fan_out_scan(df, id_col)
-    spans = _span_frame(df, id_col, text_col, k, th_col)
+    spans = managed_store(
+        _span_frame(df, id_col, text_col, k, th_col), "h", scratch_dir, "spans_bkt"
+    )
     # Aggregate counts (map-side partials collapse each partition's
     # repeats before the wire, so the count shuffle moves
     # near-distinct hashes, not span rows), keep only dup hashes
@@ -134,78 +144,9 @@ def _dup_spans(
     # when it fits and skew-splits the join when it doesn't; either
     # way no unsplittable per-hash group exists anywhere. Past the
     # broadcast transition (dup-hash set > the 64 MB threshold, ~5M
-    # docs on this corpus) prefer materialize='bucketed': the
-    # bucket-local join cuts 5M cold 46%/60% vs cache/checkpoint and
-    # returns the 500k->5M exponent to ~1.0 (NOTES r9 A/B).
-    # Materialize the span frame once: the count side and the probe
-    # side would otherwise each recompute the whole tokenize+hash UDF
-    # chain (same posture as the minhash pipeline's materialize knob:
-    # cache at iterative/bench scale, checkpoint parquet for the
-    # corpus-scale fault-isolation posture).
-    if materialize == "checkpoint":
-        if not scratch_dir:
-            raise ValueError("materialize='checkpoint' needs scratch_dir")
-        import os
-        import uuid
-
-        from cloud_dataflow_batch_processing_spark.caching import (
-            register_managed_scratch,
-        )
-
-        # Engine-owned <uuid> subdir, registered for deletion at the
-        # caller's release_managed_caches() boundary — same lifecycle
-        # as the minhash band checkpoint (VERDICT r5 #4: span-store
-        # scratch must not accumulate across a long session). The
-        # caller's scratch_dir itself is never deleted.
-        path = register_managed_scratch(
-            df.sparkSession, os.path.join(scratch_dir, uuid.uuid4().hex[:12])
-        )
-        spans.write.mode("overwrite").parquet(path)
-        spans = df.sparkSession.read.parquet(path)
-    elif materialize == "bucketed":
-        # VERDICT r8 #6 lever for the d2 broadcast→SMJ regime
-        # transition: persist the span store BUCKETED (and sorted) by
-        # the span hash. The dup-count groupBy and the dup semi-join
-        # both consume the bucketed scan's hash distribution, so once
-        # the store is written, NEITHER side of the join exchanges —
-        # the one remaining span-volume shuffle is the repartition
-        # folded into the write (one file per bucket, so the reader
-        # also recognizes per-bucket sort order and skips the SMJ
-        # sorts). Net vs 'checkpoint' at the 5M point: the join-side
-        # exchange+sort of the full span frame is traded for a
-        # write-side repartition that pipelines with the parquet
-        # encode. Measured A/B and adoption decision in NOTES.md
-        # ("Substring d2 transition, third lever: bucketed span store",
-        # round 9).
-        if not scratch_dir:
-            raise ValueError("materialize='bucketed' needs scratch_dir")
-        import os
-        import uuid
-
-        from cloud_dataflow_batch_processing_spark.caching import (
-            register_managed_scratch,
-            register_managed_table,
-        )
-
-        spark = df.sparkSession
-        tag = uuid.uuid4().hex[:12]
-        path = register_managed_scratch(spark, os.path.join(scratch_dir, tag))
-        name = register_managed_table(spark, f"spans_bkt_{tag}")
-        nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        (
-            spans.repartition(nb, "h")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(nb, "h")
-            .sortBy("h")
-            .option("path", path)
-            .saveAsTable(name)
-        )
-        spans = spark.table(name)
-    else:
-        from cloud_dataflow_batch_processing_spark.caching import managed_cache
-
-        spans = managed_cache(spans)
+    # docs on this corpus) pass a scratch_dir: the bucket-local join
+    # cuts 5M cold 46% vs cache and returns the 500k->5M exponent to
+    # ~1.0 (NOTES r9 A/B).
     return spans.join(_repeated_hashes(spans), "h", "left_semi").select(
         "doc_id", "n_tokens", "pos"
     )
@@ -216,7 +157,6 @@ def remove_intervals(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    materialize: str = "cache",
     scratch_dir: str | None = None,
     th_col: str | None = None,
 ) -> DataFrame:
@@ -226,7 +166,7 @@ def remove_intervals(
     sorted by pos merge iff the gap <= k). Returns
     (doc_id, start_pos, end_pos) with token positions 1-based and
     end exclusive."""
-    dup = _dup_spans(df, id_col, text_col, k, materialize, scratch_dir, th_col)
+    dup = _dup_spans(df, id_col, text_col, k, scratch_dir, th_col)
     return _merge_marked_spans(dup, k)
 
 
@@ -294,7 +234,6 @@ def substring_dup_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_TOKENS,
-    materialize: str = "cache",
     scratch_dir: str | None = None,
     th_col: str | None = None,
 ) -> DataFrame:
@@ -302,7 +241,7 @@ def substring_dup_stats(
     (doc_id, n_tokens, n_remove_intervals, removed_tokens,
     kept_tokens, removed_frac). Documents with no duplicated span (or
     fewer than k tokens) report zeros."""
-    iv = remove_intervals(df, id_col, text_col, k, materialize, scratch_dir, th_col)
+    iv = remove_intervals(df, id_col, text_col, k, scratch_dir, th_col)
     return _interval_report(iv, df, id_col, text_col, th_col)
 
 

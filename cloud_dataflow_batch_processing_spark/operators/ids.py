@@ -58,8 +58,8 @@ def assign_sequential_ids(
     # the count job and the main job provably see identical partition
     # boundaries (range boundaries come from sampling; two independent
     # executions are not contractually identical). At 100 TB swap the
-    # cache for a checkpoint write — same posture trade as
-    # minhash_near_dup_pairs' materialize knob.
+    # cache for a parquet write — the trade the dedup stores make
+    # under a scratch_dir (caching.managed_store).
     sizes = (
         parted.groupBy(F.spark_partition_id().alias("pid"))
         .count()

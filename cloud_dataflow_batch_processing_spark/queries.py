@@ -63,27 +63,31 @@ def register(
 
 # DRIVER_WINDOW rotation (round 13), produced mechanically by
 # `scripts/rotate_window.py --write <names>`: the named queries lead —
-# the five whose exact-substring span pipeline was folded into one span
-# builder, one dup-marking path and one per-document report
-# (substring_dedup_stats, substring_dedup_clean,
-# substring_dedup_incremental, decontaminate_exact_spans,
-# corpus_build_full) and dedup_near_exact_keep, whose near-exact key
-# lost its HOF token-hash branch — so the external correctness gate
-# certifies the changed code paths in the same round. They are followed
-# by the names the round's earlier rotation led with: the three whose
-# pair verify became one grouped per-bucket cosine kernel
+# the five whose dedup stores now follow one storage rule and one
+# token-hash path (dedup_minhash_pairs, which lost its interpreted
+# token-hash branch; dedup_cross_source_matrix, which moved from the
+# unmaterialized posture to the cached store; corpus_build_full,
+# dedup_minhash_pairs_fast, substring_dedup_stats) — so the external
+# correctness gate certifies the changed code paths in the same round.
+# They are followed by the round's earlier picks in window order: the
+# single span pipeline (substring_dedup_clean,
+# substring_dedup_incremental, decontaminate_exact_spans),
+# dedup_near_exact_keep, the grouped per-bucket cosine kernel
 # (semantic_dedup_prune, ann_lsh_pairs, dedup_embedding_cosine) and
 # streaming_lsh_dedup and datastore_mutations_agg, whose parity tests
 # sit in the slowsweep tier (VERDICT r12 #2). The rest is
 # least-recently-certified, ties alphabetical. Overlap with
-# CORRECTNESS_r12.json is 3 <= 25, so the rotation gate
+# CORRECTNESS_r12.json is 4 <= 25, so the rotation gate
 # (tests/test_window_rotation.py) is green.
 DRIVER_WINDOW: tuple[str, ...] = (
+    "dedup_minhash_pairs",
+    "dedup_cross_source_matrix",
+    "corpus_build_full",
+    "dedup_minhash_pairs_fast",
     "substring_dedup_stats",
     "substring_dedup_clean",
     "substring_dedup_incremental",
     "decontaminate_exact_spans",
-    "corpus_build_full",
     "dedup_near_exact_keep",
     "semantic_dedup_prune",
     "ann_lsh_pairs",
@@ -96,7 +100,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "corpus_split_train_val",
     "dedup_exact",
     "dedup_incremental_minhash",
-    "dedup_minhash_pairs_fast",
     "dedup_quality_survivor",
     "dedup_segments",
     "dedup_simhash",
@@ -127,8 +130,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "retention_cohorts",
     "scd2_user_event_history",
     "semantic_kmeans_assign",
-    "sessionize_events",
-    "snapshot_diff_orders",
 )
 
 

@@ -66,21 +66,22 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_pairs",
     oracle=D.minhash_pipeline_sql(threshold=0.8),
     headline=True,
-    # The HOF oracle-reference twin of dedup_minhash_pairs_fast (same
-    # oracle, bit-identical values); the production-default fast path
-    # holds the primary driver row, this one registers late.
+    # Runs the same path as dedup_minhash_pairs_fast; the name stays
+    # because bench, the correctness records and the SQL facade key on
+    # it. The fast name holds the primary driver row, this one
+    # registers late.
     late=True,
 )
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-duplicate detection with the pure-Column HOF
-    token-hash fold (fast_hashing=False) — the oracle-reference
-    variant: shingles → 16-lane signature → 4 LSH bands → bucket
-    self-join → exact Jaccard ≥ 0.8. The driver's planted near-dup
-    docs (shingle-Jaccard ≈ 0.99) surface here; the oracle recomputes
-    the identical pipeline in SQL. Kept in bench so the HOF-vs-Arrow
-    trade stays measured at sf0.1 (VERDICT r1 #5 / r2 #4)."""
+    """MinHash-LSH near-duplicate detection: shingles → 16-lane
+    signature → 4 LSH bands → bucket self-join → exact Jaccard ≥ 0.8.
+    The driver's planted near-dup docs (shingle-Jaccard ≈ 0.99) surface
+    here; the oracle recomputes the identical pipeline in SQL. The same
+    path as ``dedup_minhash_pairs_fast`` since the interpreted
+    token-hash variant was deleted (Arrow was faster cold at sf0.1 and
+    50k docs, NOTES r13); only THIS name's registry row is kept."""
     d = load_tables(spark, sf_dir)["documents"]
-    return D.minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.8, fast_hashing=False)
+    return D.minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.8)
 
 
 @register(
@@ -89,13 +90,12 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def dedup_minhash_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production-default MinHash-LSH pipeline: the token-hash
-    stage runs as the Arrow-batched pandas_udf twin
-    (functions/text_fast.py) — the ``minhash_near_dup_pairs`` default
-    since round 3. Values are bit-identical to the HOF fold, so the
-    SAME DuckDB oracle verifies this path."""
+    """The production MinHash-LSH pipeline: the token-hash stage runs
+    as the Arrow-batched pandas_udf twin (functions/text_fast.py).
+    Values are bit-identical to the Column fold, so the SAME DuckDB
+    oracle verifies this path."""
     d = load_tables(spark, sf_dir)["documents"]
-    return D.minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.8, fast_hashing=True)
+    return D.minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.8)
 
 
 @register(
@@ -145,7 +145,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of each pair) → language-ID corpus stats. Every stage is the
     same oracle-checked operator used standalone; this query checks
     their composition. Runs the production defaults (Arrow-batched
-    fast_hashing since round 3; Arrow lang-id/quality twins since this
+    token hashes since round 3; Arrow lang-id/quality twins since this
     session — bit-identical to the Column expressions, so the SAME
     oracle verifies, and they halve the per-row expression cost that
     dominated this query's warm profile)."""
@@ -741,8 +741,8 @@ def corpus_build_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain). Scale posture: the union of each stage's posture — no
     all-pairs joins, eval side broadcast, substring dup-marking one
     hash shuffle; stage boundaries are anti-joins on doc_id (narrow
-    keys). The 100 TB submission configuration passes
-    ``materialize='bucketed'`` for BOTH stores via :func:`corpus_build`
+    keys). The 100 TB submission configuration passes a
+    ``scratch_dir`` to :func:`corpus_build`, which buckets BOTH stores
     (certified end-to-end at 5M docs — tests/test_corpus_scale.py)."""
     return corpus_build(spark, sf_dir)
 
@@ -750,16 +750,15 @@ def corpus_build_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_build(
     spark: SparkSession,
     sf_dir: str,
-    materialize: str = "cache",
     scratch_dir: str | None = None,
 ) -> DataFrame:
-    """Parameterized corpus build behind ``corpus_build_full``: the
-    ``materialize``/``scratch_dir`` knob pair is forwarded to BOTH
-    heavy stores (the MinHash signature store and the substring span
-    store) so the composed pipeline can run the bench posture
-    ('cache', default), the fault-isolation posture ('checkpoint'), or
-    the corpus-scale posture ('bucketed' — zero wide re-exchange,
-    adopted via the 500k/5M A/Bs, NOTES r10) as ONE configuration."""
+    """Parameterized corpus build behind ``corpus_build_full``:
+    ``scratch_dir`` is forwarded to BOTH heavy stores (the MinHash
+    signature store and the substring span store), so the composed
+    pipeline runs as ONE configuration — cached stores without it (the
+    bench posture), bucketed parquet tables under it (the corpus-scale
+    posture: zero wide re-exchange, adopted via the 500k/5M A/Bs,
+    NOTES r10)."""
     from cloud_dataflow_batch_processing_spark.extensions import substring as _SUB
     from cloud_dataflow_batch_processing_spark.functions.text_fast import (
         quality_th_fast,
@@ -807,7 +806,7 @@ def corpus_build(
     # races AQE's cache replacement: byte-identical runs flipped
     # between reusing and re-executing the exact-dedup exchange
     # (work-profile 3 vs 4 shuffles). At 100 TB the same boundaries
-    # would be checkpoint writes (the dedup family's materialize knob).
+    # would be parquet writes, like the dedup stores under a scratch_dir.
     from pyspark.sql import Window as _W
 
     q2 = materialize_stage(
@@ -821,8 +820,7 @@ def corpus_build(
     nd = (
         D.minhash_near_dup_pairs(
             q2, "doc_id", "text", threshold=0.8,
-            materialize=materialize, scratch_dir=scratch_dir,
-            th_col="__th",
+            scratch_dir=scratch_dir, th_col="__th",
         )
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
@@ -845,7 +843,7 @@ def corpus_build(
         .select(F.explode(F.array_distinct("__shl")).alias("h"))
         .distinct()
     )
-    if materialize == "cache":
+    if scratch_dir is None:
         # The near-dup stage above cached the q2 signature frame
         # (managed_cache inside minhash_near_dup_pairs); rebuilding the
         # IDENTICAL plan here substitutes that InMemoryRelation
@@ -870,8 +868,8 @@ def corpus_build(
             .filter(F.size("sh") > 0)
         )
     else:
-        # checkpoint/bucketed postures materialize signatures under
-        # uuid-tagged paths/tables the plan matcher cannot see; the
+        # The bucketed signature store lives in a uuid-tagged table
+        # the plan matcher cannot see; the
         # q3-only recompute stays (strictly less work than rebuilding
         # the full-q2 signature frame on a cache miss) — and with
         # `__th` carried, it is a JVM-only shingle fold: no re-tokenize.
@@ -892,7 +890,7 @@ def corpus_build(
     )
     q4 = materialize_stage(q3.join(contaminated, "doc_id", "left_anti"))
     st = _SUB.substring_dup_stats(
-        q4, materialize=materialize, scratch_dir=scratch_dir, th_col="__th"
+        q4, scratch_dir=scratch_dir, th_col="__th"
     )
     return (
         q4.join(st, "doc_id")
@@ -1161,15 +1159,8 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloud_dataflow_batch_processing_spark.caching import materialize_stage
 
     d = load_tables(spark, sf_dir)["documents"]
-    # materialize=None (r12, VERDICT r11 #7): the pair frame is
-    # consumed exactly once — into the eager stage cache right here —
-    # so the pipeline's internal cache posture (signature + bands
-    # caches, built for repeated/multi-consumer use) is pure overhead
-    # in this query; the None posture serves the self-join's two sides
-    # from ONE shuffle write via ReuseExchange and runs the hash
-    # pipeline once into this cache.
     pairs = materialize_stage(
-        D.minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.8, materialize=None)
+        D.minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.8)
     )
     src = d.select("doc_id", "source")
     sa = src.select(

@@ -9,14 +9,6 @@ This script pins the WORK profile (shuffle records per exchange,
 broadcast rows, result rows) of the four scale_sf1 queries on the same
 deterministic 50k-doc corpus bench.py uses.
 
-One deliberate divergence from bench.py: the dedup compositions run
-with ``materialize=None`` here (bench uses ``checkpoint``). The
-checkpoint mode splits the pipeline into two jobs and the profile of
-the second job would silently exclude the band-build work; with
-``materialize=None`` the WHOLE pipeline is one plan and every exchange
-is pinned. The work upstream/downstream of the materialization hop is
-identical either way, so drift in either half fails here.
-
 Regenerate ONLY when a plan change is deliberate, and say why in the
 commit:
 
@@ -65,9 +57,7 @@ def sf1_profile_queries(spark):
     docs = spark.read.parquet(path)
 
     def dedup_q():
-        return D.minhash_near_dup_pairs(
-            docs, "doc_id", "text", threshold=0.8, materialize=None
-        )
+        return D.minhash_near_dup_pairs(docs, "doc_id", "text", threshold=0.8)
 
     def clean_q():
         dropped = dedup_q().select(F.col("doc_b").alias("doc_id")).distinct()

@@ -1,7 +1,7 @@
 """Corpus-scale certification of the 100 TB submission configuration
 (VERDICT r10 #7): ``corpus_build_full`` with BOTH bucketed stores at
-5M docs — value parity with the checkpoint config (the BENCH scale
-posture, oracle-matched at sf1-equiv every round) plus
+5M docs — value parity with the default (cached) config (the BENCH
+scale posture, oracle-matched at sf1-equiv every round) plus
 the composed no-wide-exchange plan pins, asserted TOGETHER so the
 submission posture is certified as one configuration, not per-piece.
 

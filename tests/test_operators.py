@@ -660,11 +660,11 @@ def test_hll_register_table_accepts_expression_key(spark):
 
 
 @pytest.mark.slowsweep
-def test_checkpoint_scratch_released_with_caches(spark, tmp_path):
-    """Scratch lifecycle (VERDICT r5/r6 #5): dedup's checkpoint
-    materialization registers its <uuid> scratch dir, and
-    release_managed_caches() deletes it — N invocations leave ZERO
-    orphan directories after the caller's release boundary."""
+def test_store_scratch_released_with_caches(spark, tmp_path):
+    """Scratch lifecycle (VERDICT r5/r6 #5): dedup's bucketed signature
+    store registers its <uuid> scratch dir and catalog table, and
+    release_managed_caches() deletes both — N invocations leave ZERO
+    orphan directories or tables after the caller's release boundary."""
     import os
 
     from cloud_dataflow_batch_processing_spark.caching import (
@@ -673,31 +673,67 @@ def test_checkpoint_scratch_released_with_caches(spark, tmp_path):
     )
     from cloud_dataflow_batch_processing_spark.extensions import dedup as D
 
+    def store_tables():
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith("sigs_bkt_")]
+
     release_managed_caches()
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog " + str(i % 3))
          for i in range(12)],
         "doc_id long, text string",
     )
-    scratch_root = str(tmp_path / "bands_ckpt")
+    scratch_root = str(tmp_path / "sigs_bkt")
     for _ in range(3):
-        pairs = D.minhash_near_dup_pairs(
-            docs, "doc_id", "text",
-            materialize="checkpoint", scratch_dir=scratch_root,
-        )
+        pairs = D.minhash_near_dup_pairs(docs, "doc_id", "text", scratch_dir=scratch_root)
         pairs.count()  # consume before the release boundary
     assert managed_scratch_count() == 3
     assert len(os.listdir(scratch_root)) == 3  # one <uuid> dir per run
+    assert len(store_tables()) == 3
     release_managed_caches()
     assert managed_scratch_count() == 0
     remaining = os.listdir(scratch_root) if os.path.isdir(scratch_root) else []
     assert remaining == []
+    assert store_tables() == []
+
+
+@pytest.mark.parametrize("store", ["minhash", "substring"])
+def test_scratch_dir_alone_selects_the_bucketed_store(spark, tmp_path, store):
+    """The dedup stores' one storage rule (caching.managed_store): with
+    a scratch_dir and no other option the store plans as a bucketed
+    table scan; without one, as an in-memory cache scan."""
+    from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
+    from cloud_dataflow_batch_processing_spark.extensions import dedup as D
+    from cloud_dataflow_batch_processing_spark.extensions import substring as SS
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{j % (4 + i % 3)}" for j in range(12))) for i in range(16)],
+        "doc_id long, text string",
+    )
+
+    def plan(**kw):
+        if store == "minhash":
+            df = D.minhash_near_dup_pairs(docs, "doc_id", "text", **kw)
+        else:
+            df = SS.remove_intervals(docs, **kw)
+        return spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    release_managed_caches()
+    try:
+        cached = plan()
+        release_managed_caches()
+        bucketed = plan(scratch_dir=str(tmp_path / store))
+    finally:
+        release_managed_caches()
+    assert "InMemoryTableScan" in cached and "Bucketed: true" not in cached
+    assert "Bucketed: true" in bucketed and "InMemoryTableScan" not in bucketed
 
 
 @pytest.mark.slowsweep
 def test_minhash_bucketed_store_parity_and_plan(spark, tmp_path, tables):
-    """materialize='bucketed' (VERDICT r9 #6): same pairs as the cache
-    mode, and the wide fetch joins consume the signature store's bucket
+    """The bucketed signature store a scratch_dir selects (VERDICT
+    r9 #6): same pairs as the cached store, and the wide fetch joins consume the signature store's bucket
     distribution — the shingle arrays never re-exchange (only narrow
     candidate-side exchanges remain). Store + table follow the managed
     lifecycle."""
@@ -712,8 +748,7 @@ def test_minhash_bucketed_store_parity_and_plan(spark, tmp_path, tables):
     )
     release_managed_caches()
     bkt = D.minhash_near_dup_pairs(
-        docs, "doc_id", "text",
-        materialize="bucketed", scratch_dir=str(tmp_path / "sigs_bkt"),
+        docs, "doc_id", "text", scratch_dir=str(tmp_path / "sigs_bkt")
     )
     assert sorted(map(tuple, bkt.collect())) == ref
     plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(

@@ -50,8 +50,7 @@ def test_salt_explode_join_matches_plain(spark, tables):
 
 
 @pytest.mark.slowsweep
-@pytest.mark.parametrize("materialize", ["checkpoint", "bucketed"])
-def test_dedup_lsh_adversarial_skew(spark, tmp_path, materialize):
+def test_dedup_lsh_adversarial_skew(spark, tmp_path):
     """Adversarial corpus for the MinHash-LSH join (VERDICT r2 #7):
 
     - 1200 identical boilerplate docs → one mega-bucket per band ABOVE
@@ -68,10 +67,10 @@ def test_dedup_lsh_adversarial_skew(spark, tmp_path, materialize):
     - 2 planted near-dups (Jaccard ≈ 0.97 — one appended token) among
       distinct docs → still found.
 
-    Both storage postures plan the split: ``checkpoint`` cuts the bands
-    to round-robin files, ``bucketed`` cuts the signatures to a bucketed
-    table and self-joins the bands fresh. ``None`` and ``"cache"`` find
-    the same pairs but plan no skew split.
+    The bucketed signature store a ``scratch_dir`` selects plans the
+    split: the signatures are cut to a bucketed table and the bands
+    self-join fresh. The cached store finds the same pairs but plans no
+    skew split.
     """
     import duckdb
 
@@ -100,9 +99,9 @@ def test_dedup_lsh_adversarial_skew(spark, tmp_path, materialize):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2KB",
         # Many reduce partitions so the few hot band buckets are
         # outliers vs the MEDIAN partition size (the skew test is
-        # size > max(threshold, factor * median)); one map task per
-        # checkpoint file so a skewed reduce partition has multiple
-        # map blocks to regroup (a 1-mapper shuffle is unsplittable).
+        # size > max(threshold, factor * median)); small file splits so
+        # a skewed reduce partition has multiple map blocks to regroup
+        # (a 1-mapper shuffle is unsplittable).
         "spark.sql.shuffle.partitions": "64",
         "spark.sql.files.maxPartitionBytes": "8KB",
         "spark.sql.files.openCostInBytes": "1KB",
@@ -117,11 +116,9 @@ def test_dedup_lsh_adversarial_skew(spark, tmp_path, materialize):
             "text",
             threshold=0.8,
             max_bucket_size=1000,
-            # The 100 TB postures: bands or signatures cut to storage, so
-            # the self-join plans fresh exchanges — the shape AQE can split.
-            materialize=materialize,
-            scratch_dir=str(tmp_path / "bands_ckpt"),
-            checkpoint_files=8 if materialize == "checkpoint" else None,
+            # The 100 TB posture: signatures cut to storage, so the
+            # self-join plans fresh exchanges — the shape AQE can split.
+            scratch_dir=str(tmp_path / "sigs_bkt"),
         )
         spark_pdf = pairs.toPandas()
         plan = pairs._jdf.queryExecution().executedPlan().toString()

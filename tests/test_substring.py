@@ -223,50 +223,15 @@ class TestHistogramQuantile:
         assert rows == {0: 1, 5: 1, 9: 1}  # -5 clamps low, 1e9 clamps high, NULL drops
 
 
-def test_checkpoint_materialization_identical(spark, corpus, tmp_path):
-    """The corpus-scale posture: spans checkpointed to parquet instead
-    of cached — results identical, and the checkpoint actually holds
-    the span frame (lineage cut is real)."""
-    import os
-
-    from cloud_dataflow_batch_processing_spark.extensions import substring as SS
-
-    df, _ = corpus
-    scratch = str(tmp_path / "span_ckpt")
-    a = sorted(map(tuple, SS.substring_dup_stats(df).collect()))
-    b = sorted(
-        map(
-            tuple,
-            SS.substring_dup_stats(
-                df, materialize="checkpoint", scratch_dir=scratch
-            ).collect(),
-        )
-    )
-    assert a == b
-    # The span frame checkpoints into an engine-owned <uuid> subdir of
-    # the caller's scratch_dir...
-    subdirs = os.listdir(scratch)
-    assert subdirs and all(
-        any(f.endswith(".parquet") for f in os.listdir(os.path.join(scratch, d)))
-        for d in subdirs
-    )
-    # ...and is deleted at the managed-cache release boundary (same
-    # lifecycle as the minhash band checkpoint), leaving the caller's
-    # dir itself intact.
-    from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
-
-    release_managed_caches()
-    assert os.path.isdir(scratch) and os.listdir(scratch) == []
-
-
 def test_bucketed_materialization_identical_and_exchange_free(spark, corpus, tmp_path):
-    """VERDICT r8 #6: the bucketed span store. Value-identical to the
-    default path, and — the point of the layout — with broadcast
+    """VERDICT r8 #6: the bucketed span store a scratch_dir selects.
+    Value-identical to the cached default, and — the point of the layout — with broadcast
     disabled (the 5M regime, where the dup-hash set outgrows the 64 MB
     broadcast) the dup-count groupBy and the dup semi-join BOTH run on
     the bucket distribution: the only hashpartitioning exchange left in
     remove_intervals is the window's doc_id shuffle. Table metadata and
-    scratch files release at the managed-cache boundary."""
+    scratch files release at the managed-cache boundary; the caller's
+    scratch_dir itself survives."""
     import re
 
     from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
@@ -279,9 +244,7 @@ def test_bucketed_materialization_identical_and_exchange_free(spark, corpus, tmp
     b = sorted(
         map(
             tuple,
-            SS.substring_dup_stats(
-                df, materialize="bucketed", scratch_dir=scratch
-            ).collect(),
+            SS.substring_dup_stats(df, scratch_dir=scratch).collect(),
         )
     )
     assert a == b
@@ -291,7 +254,7 @@ def test_bucketed_materialization_identical_and_exchange_free(spark, corpus, tmp
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        iv = SS.remove_intervals(df, materialize="bucketed", scratch_dir=scratch)
+        iv = SS.remove_intervals(df, scratch_dir=scratch)
         iv.write.format("noop").mode("overwrite").save()
         plan = iv._jdf.queryExecution().executedPlan().toString()
         n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
@@ -306,14 +269,23 @@ def test_bucketed_materialization_identical_and_exchange_free(spark, corpus, tmp
         else:
             spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
 
+    import os
+
     tables_before = {t.name for t in spark.catalog.listTables()}
     assert any(t.startswith("spans_bkt_") for t in tables_before)
+    # The store is written into engine-owned <uuid> subdirs of the
+    # caller's scratch_dir (the lineage cut is real)...
+    subdirs = os.listdir(scratch)
+    assert subdirs and all(
+        any(f.endswith(".parquet") for f in os.listdir(os.path.join(scratch, d)))
+        for d in subdirs
+    )
+    # ...which release at the managed-cache boundary with the tables,
+    # leaving the caller's dir itself intact.
     release_managed_caches()
     assert not any(
         t.name.startswith("spans_bkt_") for t in spark.catalog.listTables()
     )
-    import os
-
     assert os.path.isdir(scratch) and os.listdir(scratch) == []
 
 
