@@ -115,10 +115,15 @@ def managed_store(
     return spark.table(name)
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: the file system its scheme
+    names, as Spark's own reads and writes of it resolve it."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _delete_path(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_path(spark, path)
     fs.delete(p, True)
 
 

@@ -14,8 +14,10 @@ production.
 
 Scale posture:
 - Blobs never pass through Python row-at-a-time; mapInPandas streams
-  Arrow batches, and ``spark.sql.execution.arrow.maxRecordsPerBatch``
-  bounds per-batch memory for fat rows (set it small for video).
+  Arrow batches (``spark.sql.execution.arrow.maxBytesPerBatch`` bounds
+  their bytes), and every transform re-slices each batch into
+  ``batch_size``-row chunks, so at most ``batch_size`` decoded blobs
+  are held at once. No transform touches the session's Arrow conf.
 - Feature extraction is 1→1 per blob and embarrassingly parallel —
   repartition by size before heavy decode so stragglers don't pin a
   task (``balance_by_size``).
@@ -119,12 +121,18 @@ def _decode_impl(kind: str, content: bytes) -> list[float]:
 
 def _check_batch_size(batch_size: int) -> None:
     """Validate up front, on the driver. Unvalidated, a non-positive
-    value either silently disables Arrow batch capping (conf path —
-    the OOM guard the parameter exists for) or dies as an opaque
-    ``range() arg 3 must not be zero`` inside an executor task (slice
-    path). Fail loudly before any job is launched instead."""
+    value dies as an opaque ``range() arg 3 must not be zero`` inside
+    an executor task. Fail loudly before any job is launched instead."""
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
+
+
+def _chunks(batches: Iterator[pd.DataFrame], batch_size: int) -> Iterator[pd.DataFrame]:
+    """Each incoming Arrow batch re-sliced into ``batch_size``-row chunks
+    (ADVICE r4 — the bound on decoded blobs held at once)."""
+    for full in batches:
+        for lo in range(0, len(full), batch_size):
+            yield full.iloc[lo : lo + batch_size]
 
 
 def decode_and_featurize(df: DataFrame, batch_size: int = 64) -> DataFrame:
@@ -132,15 +140,13 @@ def decode_and_featurize(df: DataFrame, batch_size: int = 64) -> DataFrame:
 
     The mapInPandas generator is the Beam ``DoFn.process`` twin with
     bundle lifecycle (start = generator entry, finish = exhaustion);
-    batch size is capped via the Arrow config rather than element
-    count so fat video rows don't blow executor memory.
+    ``batch_size`` rows are decoded per chunk so fat video rows don't
+    blow executor memory.
     """
     _check_batch_size(batch_size)
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, batch_size):
             feats = [
                 _decode_impl(k, c) for k, c in zip(pdf["kind"], pdf["content"])
             ]
@@ -184,13 +190,11 @@ def extract_exact_features(df: DataFrame, batch_size: int = 64) -> DataFrame:
     :func:`decode_and_featurize`'s float features. Unknown formats
     yield NULL features rather than fake values."""
     _check_batch_size(batch_size)
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     from cloud_dataflow_batch_processing_spark.extensions import media_codecs as M
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, batch_size):
             rows = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 content = bytes(content) if content is not None else None
@@ -227,43 +231,35 @@ def resize_images(df: DataFrame, width: int, height: int, batch_size: int = 64) 
     BMP, and stamp the new dims. Rows whose content is not a decodable
     image pass through unchanged (a corrupt file must not kill a 100 TB
     job; the caller filters on meta dims if it needs only successes).
-    Arrow-batched mapInPandas, 1→1, schema-stable. ``batch_size``
-    bounds how many decoded blobs are held at once: each incoming
-    Arrow batch is re-sliced and yielded in ``batch_size``-row chunks
-    (ADVICE r4 — the parameter used to be accepted but ignored)."""
+    Arrow-batched mapInPandas, 1→1, schema-stable, ``batch_size``-row
+    chunks (``_chunks``)."""
     _check_batch_size(batch_size)
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from cloud_dataflow_batch_processing_spark.extensions import media_codecs as MC
 
     schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in batches:
-            for lo in range(0, len(full), batch_size):
-                pdf = full.iloc[lo : lo + batch_size]
-                out_content, out_meta = [], []
-                for content, meta in zip(pdf["content"], pdf["meta"]):
-                    kind = sniff_format(bytes(content) if content is not None else None)
-                    try:
-                        if kind in ("bmp", "ppm", "png"):
-                            w, h, rgb = MC.decode_image(kind, bytes(content))
-                            resized = MC.resize_nearest(w, h, rgb, width, height)
-                            out_content.append(MC.encode_bmp(width, height, resized))
-                            meta = dict(meta) if meta is not None else {}
-                            meta.update({"mime": "image/bmp", "width": width, "height": height})
-                            out_meta.append(meta)
-                            continue
-                    except Exception:
-                        pass  # undecodable image: fall through to passthrough
-                    out_content.append(content)
-                    out_meta.append(meta)
-                pdf = pdf.copy()
-                pdf["content"] = out_content
-                pdf["meta"] = out_meta
-                yield pdf
+        for pdf in _chunks(batches, batch_size):
+            out_content, out_meta = [], []
+            for content, meta in zip(pdf["content"], pdf["meta"]):
+                kind = sniff_format(bytes(content) if content is not None else None)
+                try:
+                    if kind in ("bmp", "ppm", "png"):
+                        w, h, rgb = MC.decode_image(kind, bytes(content))
+                        resized = MC.resize_nearest(w, h, rgb, width, height)
+                        out_content.append(MC.encode_bmp(width, height, resized))
+                        meta = dict(meta) if meta is not None else {}
+                        meta.update({"mime": "image/bmp", "width": width, "height": height})
+                        out_meta.append(meta)
+                        continue
+                except Exception:
+                    pass  # undecodable image: fall through to passthrough
+                out_content.append(content)
+                out_meta.append(meta)
+            pdf = pdf.copy()
+            pdf["content"] = out_content
+            pdf["meta"] = out_meta
+            yield pdf
 
     return df.mapInPandas(run, schema=schema)
 
@@ -276,40 +272,34 @@ def resample_audio(df: DataFrame, sample_rate: int, batch_size: int = 64) -> Dat
     unchanged, same fault posture (and same ``batch_size`` re-slicing)
     as resize_images."""
     _check_batch_size(batch_size)
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from cloud_dataflow_batch_processing_spark.extensions import media_codecs as MC
 
     schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in batches:
-            for lo in range(0, len(full), batch_size):
-                pdf = full.iloc[lo : lo + batch_size]
-                out_content, out_meta = [], []
-                for content, meta in zip(pdf["content"], pdf["meta"]):
-                    kind = sniff_format(bytes(content) if content is not None else None)
-                    try:
-                        if kind == "wav":
-                            wav = MC.decode_wav(bytes(content))
-                            res = MC.resample_wav_nearest(wav, sample_rate)
-                            out_content.append(
-                                MC.encode_wav(res.samples, res.sample_rate, res.channels)
-                            )
-                            meta = dict(meta) if meta is not None else {}
-                            meta.update({"mime": "audio/wav", "duration_ms": res.duration_ms})
-                            out_meta.append(meta)
-                            continue
-                    except Exception:
-                        pass
-                    out_content.append(content)
-                    out_meta.append(meta)
-                pdf = pdf.copy()
-                pdf["content"] = out_content
-                pdf["meta"] = out_meta
-                yield pdf
+        for pdf in _chunks(batches, batch_size):
+            out_content, out_meta = [], []
+            for content, meta in zip(pdf["content"], pdf["meta"]):
+                kind = sniff_format(bytes(content) if content is not None else None)
+                try:
+                    if kind == "wav":
+                        wav = MC.decode_wav(bytes(content))
+                        res = MC.resample_wav_nearest(wav, sample_rate)
+                        out_content.append(
+                            MC.encode_wav(res.samples, res.sample_rate, res.channels)
+                        )
+                        meta = dict(meta) if meta is not None else {}
+                        meta.update({"mime": "audio/wav", "duration_ms": res.duration_ms})
+                        out_meta.append(meta)
+                        continue
+                except Exception:
+                    pass
+                out_content.append(content)
+                out_meta.append(meta)
+            pdf = pdf.copy()
+            pdf["content"] = out_content
+            pdf["meta"] = out_meta
+            yield pdf
 
     return df.mapInPandas(run, schema=schema)
 
@@ -349,65 +339,3 @@ def balance_by_size(df: DataFrame, target_partition_bytes: int = 128 * 1024 * 10
     total = df.agg(F.sum(F.length("content"))).head()[0] or 0
     parts = max(1, int(total / target_partition_bytes))
     return df.repartition(parts)
-
-
-def extract_exact_features_arrow(df: DataFrame, batch_size: int = 64) -> DataFrame:
-    """`mapInArrow` twin of :func:`extract_exact_features`: consumes
-    pyarrow RecordBatches directly, so the binary blobs never
-    materialize into a pandas block at all — for wide binary columns
-    the pandas bridge is pure copy overhead, and this is the
-    lowest-overhead Python batch surface Spark 4 has. Features are
-    value-identical to the pandas path (unit-asserted)."""
-    import pyarrow as pa
-
-    _check_batch_size(batch_size)
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-
-    from cloud_dataflow_batch_processing_spark.extensions import media_codecs as M
-
-    arrow_schema = pa.schema(
-        [
-            pa.field("media_id", pa.int64()),
-            pa.field("format", pa.string()),
-            pa.field("img_w", pa.int64()),
-            pa.field("img_h", pa.int64()),
-            pa.field("sum_r", pa.int64()),
-            pa.field("sum_g", pa.int64()),
-            pa.field("sum_b", pa.int64()),
-            pa.field("wav_frames", pa.int64()),
-            pa.field("wav_duration_ms", pa.int64()),
-            pa.field("wav_sum", pa.int64()),
-        ]
-    )
-
-    def run(batches):
-        for rb in batches:
-            mids = rb.column(rb.schema.get_field_index("media_id"))
-            contents = rb.column(rb.schema.get_field_index("content"))
-            cols: dict[str, list] = {f.name: [] for f in arrow_schema}
-            for mid, content in zip(mids, contents):
-                content = content.as_py()
-                fmt = sniff_format(content)
-                row = dict.fromkeys(cols)
-                row["media_id"] = mid.as_py()
-                row["format"] = fmt
-                if fmt in M.IMAGE_FORMATS:
-                    w, h, rgb = M.decode_image(fmt, content)
-                    f = M.image_features(w, h, rgb)
-                    row.update(
-                        img_w=w, img_h=h,
-                        sum_r=f["sum_r"], sum_g=f["sum_g"], sum_b=f["sum_b"],
-                    )
-                elif fmt == "wav":
-                    f = M.audio_features(M.decode_wav(content))
-                    row.update(
-                        wav_frames=f["n_frames"],
-                        wav_duration_ms=f["duration_ms"],
-                        wav_sum=f["sum_samples"],
-                    )
-                for k, v in row.items():
-                    cols[k].append(v)
-            yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-
-    return df.mapInArrow(run, schema=EXACT_FEATURE_SCHEMA)

@@ -36,10 +36,6 @@ class _Labeled:
         self.transform = transform
 
 
-def _rrshift(label: str, transform: Callable) -> _Labeled:
-    return _Labeled(label, transform)
-
-
 class PValue:
     """A labeled node wrapping a DataFrame (Beam PCollection twin,
     beam/pvalue.py:112). ``|`` applies a transform (a callable

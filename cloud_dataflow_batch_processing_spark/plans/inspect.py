@@ -30,10 +30,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def _simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().simpleString()
-
-
 def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
     """Every fragment must appear inside a PushedFilters[...] clause of
     the physical scan (predicate pushdown reached parquet)."""

@@ -63,23 +63,28 @@ def register(
 
 # DRIVER_WINDOW rotation (round 13), produced mechanically by
 # `scripts/rotate_window.py --write <names>`: the named queries lead —
-# the five whose dedup stores now follow one storage rule and one
-# token-hash path (dedup_minhash_pairs, which lost its interpreted
-# token-hash branch; dedup_cross_source_matrix, which moved from the
-# unmaterialized posture to the cached store; corpus_build_full,
-# dedup_minhash_pairs_fast, substring_dedup_stats) — so the external
-# correctness gate certifies the changed code paths in the same round.
-# They are followed by the round's earlier picks in window order: the
-# single span pipeline (substring_dedup_clean,
-# substring_dedup_incremental, decontaminate_exact_spans),
-# dedup_near_exact_keep, the grouped per-bucket cosine kernel
-# (semantic_dedup_prune, ann_lsh_pairs, dedup_embedding_cosine) and
-# streaming_lsh_dedup and datastore_mutations_agg, whose parity tests
-# sit in the slowsweep tier (VERDICT r12 #2). The rest is
+# the three whose code paths the batch-keyed store change touched
+# (streaming_lsh_dedup, whose signature store and survivor sink now run
+# through streaming/batch_store.py; multimodal_decode_features, whose
+# feature extraction no longer rewrites the session's Arrow batch size;
+# avro_roundtrip_agg, whose reader discovers the schema from the file
+# header) — so the external correctness gate certifies them in the same
+# round. They are followed by the round's earlier picks in window
+# order: the dedup-store queries (dedup_minhash_pairs,
+# dedup_cross_source_matrix, corpus_build_full,
+# dedup_minhash_pairs_fast, substring_dedup_stats), the single span
+# pipeline (substring_dedup_clean, substring_dedup_incremental,
+# decontaminate_exact_spans), dedup_near_exact_keep, the grouped
+# per-bucket cosine kernel (semantic_dedup_prune, ann_lsh_pairs,
+# dedup_embedding_cosine) and datastore_mutations_agg, whose parity test
+# sits in the slowsweep tier (VERDICT r12 #2). The rest is
 # least-recently-certified, ties alphabetical. Overlap with
-# CORRECTNESS_r12.json is 4 <= 25, so the rotation gate
+# CORRECTNESS_r12.json is 5 <= 25, so the rotation gate
 # (tests/test_window_rotation.py) is green.
 DRIVER_WINDOW: tuple[str, ...] = (
+    "streaming_lsh_dedup",
+    "multimodal_decode_features",
+    "avro_roundtrip_agg",
     "dedup_minhash_pairs",
     "dedup_cross_source_matrix",
     "corpus_build_full",
@@ -92,7 +97,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "semantic_dedup_prune",
     "ann_lsh_pairs",
     "dedup_embedding_cosine",
-    "streaming_lsh_dedup",
     "datastore_mutations_agg",
     "boilerplate_ngrams",
     "corpus_audit_report",
@@ -116,7 +120,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "incremental_rollup_orders",
     "json_roundtrip_agg",
     "multi_table_join_chain",
-    "multimodal_decode_features",
     "pack_sequences",
     "pagerank_supplier_customer",
     "partition_route",
@@ -129,7 +132,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "range_join_events",
     "retention_cohorts",
     "scd2_user_event_history",
-    "semantic_kmeans_assign",
 )
 
 

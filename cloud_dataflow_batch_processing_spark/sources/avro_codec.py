@@ -102,21 +102,6 @@ _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH_TS = _dt.datetime(1970, 1, 1)
 
 
-def _schema_type(schema: Any) -> Any:
-    """Normalize: a schema is a string primitive, a dict, or a union list."""
-    if isinstance(schema, dict) and schema.get("type") in (
-        "record",
-        "array",
-        "map",
-        "enum",
-        "fixed",
-    ):
-        return schema["type"]
-    if isinstance(schema, dict):
-        return schema  # primitive-with-logicalType dict; handled by caller
-    return schema
-
-
 def encode_value(buf: bytearray, schema: Any, value: Any) -> None:
     if isinstance(schema, list):  # union — branch index then value
         idx = _union_branch(schema, value)
@@ -212,15 +197,14 @@ def _union_branch(union: list, value: Any) -> int:
 
 
 # --- compiled decode path ---------------------------------------------------
-# ``decode_value`` re-dispatches on the schema (isinstance + dict lookups)
-# for EVERY value and pulls varints byte-by-byte out of io.BytesIO (one
-# method call + bytes allocation per byte). At container volume that
-# per-value interpretation dominates the read side (guide §4: do the
-# heavy lifting once, not per row). ``compile_decoder`` walks the schema
-# ONCE and returns a tree of specialized closures over (buf: bytes,
-# pos: int) -> (value, new_pos) — identical values (same union/logical/
-# block-form semantics, same error wording where reachable), measured
-# 3-6x faster on the OCF read path.
+# An interpreted decoder re-dispatches on the schema (isinstance + dict
+# lookups) for EVERY value and pulls varints byte-by-byte out of
+# io.BytesIO (one method call + bytes allocation per byte); at container
+# volume that per-value interpretation dominates the read side (guide §4:
+# do the heavy lifting once, not per row). ``compile_decoder`` walks the
+# schema ONCE and returns a tree of specialized closures over (buf: bytes,
+# pos: int) -> (value, new_pos) — measured 3-6x faster on the OCF read
+# path than the interpreted decoder it replaced.
 
 
 def _dec_long(buf: bytes, pos: int) -> tuple[int, int]:
@@ -246,8 +230,8 @@ def _dec_long(buf: bytes, pos: int) -> tuple[int, int]:
 
 
 def compile_decoder(schema: Any):
-    """Schema → ``f(buf, pos) -> (value, new_pos)``; values identical to
-    :func:`decode_value` on the same bytes."""
+    """Schema → ``f(buf, pos) -> (value, new_pos)``: the inverse of
+    :func:`encode_value`."""
     if isinstance(schema, list):
         branches = [compile_decoder(s) for s in schema]
         n = len(branches)
@@ -398,67 +382,6 @@ def compile_decoder(schema: Any):
     raise ValueError(f"unsupported avro schema: {schema!r}")
 
 
-def decode_value(buf: io.BytesIO, schema: Any) -> Any:
-    if isinstance(schema, list):
-        idx = read_long(buf)
-        if idx < 0 or idx >= len(schema):
-            raise ValueError(f"union index {idx} out of range")
-        return decode_value(buf, schema[idx])
-    if isinstance(schema, dict):
-        t = schema["type"]
-        logical = schema.get("logicalType")
-        if t == "record":
-            return {f["name"]: decode_value(buf, f["type"]) for f in schema["fields"]}
-        if t == "array":
-            out = []
-            while True:
-                n = read_long(buf)
-                if n == 0:
-                    return out
-                if n < 0:  # negative count ⇒ byte-size follows (skippable form)
-                    read_long(buf)
-                    n = -n
-                for _ in range(n):
-                    out.append(decode_value(buf, schema["items"]))
-        if t == "map":
-            out = {}
-            while True:
-                n = read_long(buf)
-                if n == 0:
-                    return out
-                if n < 0:
-                    read_long(buf)
-                    n = -n
-                for _ in range(n):
-                    k = read_n(buf, read_long(buf)).decode("utf-8")
-                    out[k] = decode_value(buf, schema["values"])
-        if t == "enum":
-            return schema["symbols"][read_long(buf)]
-        if t == "fixed":
-            return read_n(buf, schema["size"])
-        if logical == "timestamp-micros" and t == "long":
-            micros = read_long(buf)
-            return _EPOCH_TS + _dt.timedelta(microseconds=micros)
-        if logical == "date" and t == "int":
-            return _EPOCH_DATE + _dt.timedelta(days=read_long(buf))
-        schema = t
-    if schema == "null":
-        return None
-    if schema == "boolean":
-        return read_n(buf, 1) == b"\x01"
-    if schema in ("int", "long"):
-        return read_long(buf)
-    if schema == "float":
-        return struct.unpack("<f", read_n(buf, 4))[0]
-    if schema == "double":
-        return struct.unpack("<d", read_n(buf, 8))[0]
-    if schema == "bytes":
-        return read_n(buf, read_long(buf))
-    if schema == "string":
-        return read_n(buf, read_long(buf)).decode("utf-8")
-    raise ValueError(f"unsupported avro schema: {schema!r}")
-
-
 # ---------------------------------------------------------------------------
 # Object Container File
 # ---------------------------------------------------------------------------
@@ -533,7 +456,7 @@ def _container_header(bio: io.BytesIO) -> tuple[dict, str, bytes]:
 
 def read_container(buf: bytes) -> tuple[dict, list[dict]]:
     """Parse one OCF byte string → (schema, records) via the compiled
-    decoder (values identical to the interpreted ``decode_value``)."""
+    decoder."""
     bio = io.BytesIO(buf)
     schema, codec, sync = _container_header(bio)
     dec = compile_decoder(schema)

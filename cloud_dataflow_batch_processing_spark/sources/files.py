@@ -104,7 +104,7 @@ def _avro_source_missing(exc: Exception) -> bool:
     return "Failed to find data source: avro" in str(exc)
 
 
-def read_avro(spark: SparkSession, path: str, use_jvm: bool = True) -> DataFrame:
+def read_avro(spark: SparkSession, path: str) -> DataFrame:
     """Beam twin: ReadFromAvro (beam/io/avroio.py:66).
 
     Prefers the spark-avro JVM reader (vectorized, block-splittable —
@@ -115,13 +115,13 @@ def read_avro(spark: SparkSession, path: str, use_jvm: bool = True) -> DataFrame
     Only the jar-missing AnalysisException triggers the fallback; real
     read errors propagate.
     """
-    if use_jvm:
-        try:
-            return spark.read.format("avro").load(path)
-        except Exception as exc:
-            if not _avro_source_missing(exc):
-                raise
+    try:
+        return spark.read.format("avro").load(path)
+    except Exception as exc:
+        if not _avro_source_missing(exc):
+            raise
 
+    import io
     from collections.abc import Iterator
 
     import pandas as pd
@@ -134,7 +134,7 @@ def read_avro(spark: SparkSession, path: str, use_jvm: bool = True) -> DataFrame
     first = files_df.select("content").head()
     if first is None:
         raise RuntimeError(f"no avro files matched {path!r}")
-    schema_json, _ = A.read_container(bytes(first["content"]))
+    schema_json, _, _ = A._container_header(io.BytesIO(bytes(first["content"])))
     struct = A.avro_schema_to_struct(schema_json)
     field_names = [f.name for f in struct.fields]
 
@@ -158,9 +158,7 @@ def read_avro(spark: SparkSession, path: str, use_jvm: bool = True) -> DataFrame
     return files_df.mapInPandas(parse, schema=struct)
 
 
-def write_avro(
-    df: DataFrame, out_dir: str, codec: str = "deflate", use_jvm: bool = True
-) -> None:
+def write_avro(df: DataFrame, out_dir: str, codec: str = "deflate") -> None:
     """Beam twin: WriteToAvro (beam/io/avroio.py:380). One .avro OCF per
     partition (Beam writes one per bundle/shard). JVM writer when the
     spark-avro jar is present, pure-Python codec otherwise.
@@ -175,13 +173,12 @@ def write_avro(
     real cluster it would silently scatter partitions across
     executor-local disks. Deploy the spark-avro jar there instead.
     """
-    if use_jvm:
-        try:
-            df.write.mode("overwrite").format("avro").save(out_dir)
-            return
-        except Exception as exc:
-            if not _avro_source_missing(exc):
-                raise
+    try:
+        df.write.mode("overwrite").format("avro").save(out_dir)
+        return
+    except Exception as exc:
+        if not _avro_source_missing(exc):
+            raise
 
     import os
     import shutil

@@ -73,97 +73,59 @@ def _skip_literal(s: str, i: int) -> int:
     return i
 
 
-_CTE_HEAD = re.compile(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", flags=re.IGNORECASE)
+def _close_paren(s: str, i: int, what: str) -> int:
+    """Index just past the ``)`` that closes the ``(`` just before
+    ``s[i]`` (literal-aware); raises naming ``what`` when unbalanced."""
+    depth, n = 1, len(s)
+    while i < n and depth:
+        c = s[i]
+        if c in "'\"":
+            i = _skip_literal(s, i)
+            continue
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+        i += 1
+    if depth:
+        raise ValueError(f"unbalanced parens in {what}")
+    return i
 
 
-def split_ctes(query: str) -> tuple[list[tuple[str, str]], str]:
-    """Split a top-level ``WITH a AS (...), b AS (...) <tail>`` into
-    ``([(name, body), ...], tail)``; a query with no leading WITH comes
-    back as ``([], query)``. Only the OUTER WITH is split — a nested
-    WITH inside a CTE body stays in that body. Depth-0 scan that skips
-    string literals, so commas/parens inside strings never miscount.
-    ``WITH RECURSIVE`` is refused (see _run_recursive_with for that)."""
-    if re.match(r"\s*WITH\s+RECURSIVE\b", query, flags=re.IGNORECASE):
-        raise ValueError("recursive CTEs need _run_recursive_with, not split_ctes")
-    m = re.match(r"\s*WITH\s+", query, flags=re.IGNORECASE)
+_WITH = re.compile(r"\s*WITH\s+(RECURSIVE\s+)?", flags=re.IGNORECASE)
+_CTE_HEAD = re.compile(
+    r"\s*([A-Za-z_]\w*)\s*(?:\(\s*([^)]*?)\s*\))?\s+AS\s*\(", flags=re.IGNORECASE
+)
+_NESTED_WITH = re.compile(r"\(\s*WITH\b", flags=re.IGNORECASE)
+_NESTED_WITH_REC = re.compile(r"\(\s*WITH\s+RECURSIVE\b", flags=re.IGNORECASE)
+_UNION_KW = re.compile(r"\bUNION\b(\s+ALL\b)?", flags=re.IGNORECASE)
+
+
+def split_ctes(
+    query: str, recursive: bool = False
+) -> tuple[list[tuple[str, list[str] | None, str]], str]:
+    """Split a top-level ``WITH a AS (...), b(x, y) AS (...) <tail>`` into
+    ``([(name, cols-or-None, body), ...], tail)``; a query with no
+    leading WITH comes back as ``([], query)``. Only the OUTER WITH is
+    split — a nested WITH inside a CTE body stays in that body. Depth-0
+    scan that skips string literals, so commas/parens inside strings
+    never miscount. ``WITH RECURSIVE`` is refused unless ``recursive``
+    (see _run_recursive_with for that)."""
+    m = _WITH.match(query)
     if not m:
         return [], query
-    i = m.end()
-    n = len(query)
-    ctes: list[tuple[str, str]] = []
+    if m.group(1) and not recursive:
+        raise ValueError("recursive CTEs need _run_recursive_with, not split_ctes")
+    i, n = m.end(), len(query)
+    ctes: list[tuple[str, list[str] | None, str]] = []
     while True:
         hm = _CTE_HEAD.match(query, i)
         if not hm:
             raise ValueError(f"cannot parse CTE header at offset {i}: {query[i:i+60]!r}")
         name = hm.group(1)
-        j = hm.end()  # just past the opening '('
-        depth = 1
-        start = j
-        while j < n and depth:
-            c = query[j]
-            if c in "'\"":
-                j = _skip_literal(query, j)
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
-        if depth:
-            raise ValueError(f"unbalanced parens in CTE {name!r}")
-        ctes.append((name, query[start : j - 1]))
-        k = j
-        while k < n and query[k].isspace():
-            k += 1
-        if k < n and query[k] == ",":
-            i = k + 1
-            continue
-        return ctes, query[k:]
-
-
-_NESTED_WITH = re.compile(r"\(\s*WITH\b", flags=re.IGNORECASE)
-_NESTED_WITH_REC = re.compile(r"\(\s*WITH\s+RECURSIVE\b", flags=re.IGNORECASE)
-_CTE_HEAD_REC = re.compile(
-    r"\s*([A-Za-z_]\w*)\s*(?:\(\s*([^)]*?)\s*\))?\s+AS\s*\(", flags=re.IGNORECASE
-)
-_UNION_KW = re.compile(r"\bUNION\b(\s+ALL\b)?", flags=re.IGNORECASE)
-
-
-def _split_recursive_ctes(
-    query: str,
-) -> tuple[list[tuple[str, list[str] | None, str]], str]:
-    """Like :func:`split_ctes` but for ``WITH RECURSIVE``: each entry
-    may carry a column list (``reach(node, comp) AS (...)``) and comes
-    back as ``(name, cols-or-None, body)``."""
-    m = re.match(r"\s*WITH\s+RECURSIVE\s+", query, flags=re.IGNORECASE)
-    if not m:
-        raise ValueError("not a WITH RECURSIVE query")
-    i, n = m.end(), len(query)
-    ctes: list[tuple[str, list[str] | None, str]] = []
-    while True:
-        hm = _CTE_HEAD_REC.match(query, i)
-        if not hm:
-            raise ValueError(
-                f"cannot parse recursive CTE header at offset {i}: {query[i:i+60]!r}"
-            )
-        name = hm.group(1)
-        cols = (
-            [c.strip() for c in hm.group(2).split(",")] if hm.group(2) else None
-        )
-        j, depth, start = hm.end(), 1, hm.end()
-        while j < n and depth:
-            c = query[j]
-            if c in "'\"":
-                j = _skip_literal(query, j)
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
-        if depth:
-            raise ValueError(f"unbalanced parens in recursive CTE {name!r}")
-        ctes.append((name, cols, query[start : j - 1]))
+        cols = [c.strip() for c in hm.group(2).split(",")] if hm.group(2) else None
+        j = _close_paren(query, hm.end(), f"CTE {name!r}")
+        ctes.append((name, cols, query[hm.end() : j - 1]))
         k = j
         while k < n and query[k].isspace():
             k += 1
@@ -245,7 +207,7 @@ def _run_recursive_with(spark: SparkSession, query: str, gen, reg=None) -> DataF
     Every iteration's frames are eagerly checkpointed, so the loop adds
     O(1) lineage per step instead of an ever-deepening plan — the
     driver only ever holds DataFrame handles, never row data."""
-    ctes, tail = _split_recursive_ctes(query)
+    ctes, tail = split_ctes(query, recursive=True)
     for name, cols, body in ctes:
         # Self-reference = the CTE's own name in a FROM/JOIN position
         # (a bare \bname\b would false-positive on same-named COLUMNS —
@@ -331,19 +293,7 @@ def _lift_nested_withs(spark: SparkSession, s: str, gen, reg=None) -> str:
             continue
         if c == "(" and _NESTED_WITH.match(s, i):
             recursive = bool(_NESTED_WITH_REC.match(s, i))
-            j, depth = i + 1, 1
-            while j < n and depth:
-                cj = s[j]
-                if cj in "'\"":
-                    j = _skip_literal(s, j)
-                    continue
-                if cj == "(":
-                    depth += 1
-                elif cj == ")":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise ValueError("unbalanced parens in nested WITH subquery")
+            j = _close_paren(s, i + 1, "nested WITH subquery")
             inner = s[i + 1 : j - 1]
             runner = _run_recursive_with if recursive else _run_with_cte_barriers
             name = f"__barrier_sub_{next(gen)}"
@@ -393,10 +343,11 @@ def _run_with_cte_barriers(spark: SparkSession, query: str, gen=None, reg=None) 
     if re.match(r"\s*WITH\s+RECURSIVE\b", query, flags=re.IGNORECASE):
         return _run_recursive_with(spark, query, gen, reg)
     ctes, tail = split_ctes(query)
-    for name, body in ctes:
-        _run_with_cte_barriers(spark, body, gen, reg).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView(name)
+    for name, cols, body in ctes:
+        df = _run_with_cte_barriers(spark, body, gen, reg)
+        if cols:
+            df = df.toDF(*cols)
+        df.localCheckpoint(eager=True).createOrReplaceTempView(name)
         if reg is not None:
             reg.append(name)
     return spark.sql(_lift_nested_withs(spark, tail, gen, reg))

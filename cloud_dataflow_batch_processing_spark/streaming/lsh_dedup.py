@@ -25,19 +25,20 @@ Per micro-batch (``foreachBatch``):
 4. survivors append to ``out_dir/batch=N``; ALL batch signatures
    append to the store (store-all semantics, see 3).
 
-Exactly-once across failures: both writes go to batch-id-keyed
-partition directories with ``mode=overwrite``, and the store read
-excludes partitions ``>= batch_id`` — a redelivered micro-batch
-recomputes against exactly the pre-batch store version and overwrites
-its own partial output (same versioned-store discipline as
-``streaming/triggers.py``'s pane baseline). Store/out paths resolve
-through ``pyarrow.fs`` (file://, s3://, hdfs://) like kafka_replay's
-log I/O.
+Exactly-once across failures: the store and the survivor sink are
+``streaming/batch_store.py`` stores, both written with
+``mode=overwrite`` under ``batch=N`` and committed by Spark's
+``_SUCCESS`` marker. The store read is every committed version below
+``batch_id``, so a redelivered micro-batch recomputes against exactly
+the pre-batch store and overwrites its own partial output (same
+versioned-store discipline as ``streaming/triggers.py``'s pane
+baseline); a ``batch_id`` below the latest committed store version (a
+fresh checkpoint against an old store) raises. Every path resolves
+through the Hadoop FileSystem Spark writes it with (file:, hdfs:,
+s3a:, ...).
 """
 
 from __future__ import annotations
-
-import posixpath
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -45,30 +46,7 @@ from cloud_dataflow_batch_processing_spark.extensions.dedup import (
     incremental_near_dups,
     minhash_signatures,
 )
-from cloud_dataflow_batch_processing_spark.streaming.kafka_replay import _fs_for
-
-
-def _store_partitions(store_dir: str, before_batch: int) -> list[str]:
-    """Store partition paths ``batch=N`` with N < before_batch (the
-    pre-batch store version — redelivery must not read its own partial
-    write)."""
-    from pyarrow import fs as pafs
-
-    fsys, base = _fs_for(store_dir)
-    info = fsys.get_file_info(base)
-    if info.type != pafs.FileType.Directory:
-        return []
-    out = []
-    for child in fsys.get_file_info(pafs.FileSelector(base)):
-        name = posixpath.basename(child.path.rstrip("/"))
-        if child.type == pafs.FileType.Directory and name.startswith("batch="):
-            try:
-                n = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if n < before_batch:
-                out.append(posixpath.join(store_dir.rstrip("/"), name))
-    return sorted(out)
+from cloud_dataflow_batch_processing_spark.streaming import batch_store
 
 
 def process_lsh_dedup_batch(
@@ -84,10 +62,10 @@ def process_lsh_dedup_batch(
     """One micro-batch of the streaming LSH dedup (module-level so
     redelivery is directly testable). Idempotent per ``batch_id``."""
     spark = bdf.sparkSession
+    prior = batch_store.begin(spark, store_dir, batch_id)
     sigs = minhash_signatures(bdf, id_col, text_col).localCheckpoint(eager=True)
-    parts = _store_partitions(store_dir, before_batch=batch_id)
-    if parts:
-        store = spark.read.parquet(*parts)
+    if prior:
+        store = batch_store.read(spark, store_dir, prior)
     else:
         from cloud_dataflow_batch_processing_spark.sources.create import local_df
 
@@ -108,12 +86,8 @@ def process_lsh_dedup_batch(
     survivors = bdf.join(
         drops, bdf[id_col] == drops["__drop_id"], "left_anti"
     )
-    survivors.write.mode("overwrite").parquet(
-        posixpath.join(out_dir.rstrip("/"), f"batch={batch_id}")
-    )
-    sigs.write.mode("overwrite").parquet(
-        posixpath.join(store_dir.rstrip("/"), f"batch={batch_id}")
-    )
+    batch_store.write(survivors, out_dir, batch_id)
+    batch_store.write(sigs, store_dir, batch_id)
 
 
 def run_streaming_lsh_dedup(
@@ -147,19 +121,11 @@ def run_streaming_lsh_dedup(
 
 
 def read_survivors(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The accumulated survivor sink (partition column ``batch``), or
+    """The committed survivor versions (partition column ``batch``), or
     None when no batch has ever committed (an all-empty stream)."""
-    from pyarrow import fs as pafs
-
-    fsys, base = _fs_for(out_dir)
-    info = fsys.get_file_info(base)
-    if info.type != pafs.FileType.Directory:
+    done = batch_store.committed(spark, out_dir)
+    if not done:
         return None
-    has_parts = any(
-        child.type == pafs.FileType.Directory
-        and posixpath.basename(child.path.rstrip("/")).startswith("batch=")
-        for child in fsys.get_file_info(pafs.FileSelector(base))
+    return spark.read.option("basePath", out_dir).parquet(
+        *(batch_store.version_path(out_dir, b) for b in done)
     )
-    if not has_parts:
-        return None
-    return spark.read.parquet(out_dir)

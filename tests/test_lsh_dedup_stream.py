@@ -133,3 +133,46 @@ def test_single_query_batch_boundary(spark, tmp_path):
     process_lsh_dedup_batch(b1, 1, "doc_id", "text", store_ref, out_ref)
     want = sorted(r.doc_id for r in read_survivors(spark, out_ref).collect())
     assert got == want == [10, 99, 200]
+
+
+def test_batch_id_regression_raises(spark, dirs):
+    """A batch_id below the store's latest committed version (a fresh
+    checkpoint against an old store) must not dedup against nothing and
+    overwrite the old batch=0 signatures — it raises before any work."""
+    store, out = dirs
+    for b in (0, 1):
+        spark.range(1).write.parquet(f"{store}/batch={b}")
+    with pytest.raises(ValueError, match="checkpoint lineage"):
+        process_lsh_dedup_batch(_docs(spark, [(1, BASE)]), 0, "doc_id", "text", store, out)
+    assert spark.read.parquet(f"{store}/batch=0").count() == 1  # untouched
+
+
+def test_read_survivors_ignores_uncommitted_version(spark, dirs):
+    """A survivors directory without its ``_SUCCESS`` (a write that died
+    before the job commit) is invisible; committed ones keep their
+    ``batch`` partition column."""
+    import os
+
+    _, out = dirs
+    for b in (0, 1, 2):
+        _docs(spark, [(b, "x")]).write.parquet(f"{out}/batch={b}")
+    os.remove(f"{out}/batch=1/_SUCCESS")
+    got = sorted((r.doc_id, r.batch) for r in read_survivors(spark, out).collect())
+    assert got == [(0, 0), (2, 2)]
+    os.remove(f"{out}/batch=0/_SUCCESS")
+    os.remove(f"{out}/batch=2/_SUCCESS")
+    assert read_survivors(spark, out) is None
+
+
+@pytest.mark.slowsweep
+def test_store_works_through_filesystem_uri(spark, tmp_path):
+    """Store and survivor sink through ``file://`` URIs — the Hadoop-FS
+    path an s3a/gs/hdfs store takes — with a redelivered batch."""
+    store, out = f"file://{tmp_path}/store", f"file://{tmp_path}/out"
+    b0 = _docs(spark, [(10, BASE), (11, BASE + " tail")])
+    b1 = _docs(spark, [(5, BASE + " tail"), (200, "other corpus entirely " * 30)])
+    process_lsh_dedup_batch(b0, 0, "doc_id", "text", store, out)
+    process_lsh_dedup_batch(b1, 1, "doc_id", "text", store, out)
+    process_lsh_dedup_batch(b1, 1, "doc_id", "text", store, out)
+    got = sorted((r.doc_id, r.batch) for r in read_survivors(spark, out).collect())
+    assert got == [(10, 0), (200, 1)]

@@ -59,15 +59,17 @@ def test_frame_sample_explodes(spark):
     assert frames == [0, 500, 1000, 1500, 2000]
 
 
-def test_extract_exact_features_arrow_twin(spark):
-    """mapInArrow path must be value-identical to the mapInPandas path
-    (same codecs, no pandas bridge for the blobs)."""
+def test_media_transforms_leave_session_arrow_conf(spark):
+    """``batch_size`` bounds rows per decoded chunk inside the transform;
+    it must not rewrite the session's Arrow batch size, which every later
+    Arrow UDF of the session would inherit."""
     from cloud_dataflow_batch_processing_spark.extensions import media_codecs as M
     from cloud_dataflow_batch_processing_spark.extensions.multimodal import (
         extract_exact_features,
-        extract_exact_features_arrow,
     )
 
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
     rgb = bytes((i * 7) % 256 for i in range(3 * 4 * 3))
     media = spark.createDataFrame(
         [
@@ -77,11 +79,13 @@ def test_extract_exact_features_arrow_twin(spark):
             (3, None),
         ],
         "media_id long, content binary",
-    )
-    a = sorted(map(tuple, extract_exact_features_arrow(media, batch_size=2).collect()))
-    p = sorted(map(tuple, extract_exact_features(media, batch_size=2).collect()))
-    assert a == p
-    assert len(a) == 4
+    ).repartition(1)
+    got = {r.media_id: r for r in extract_exact_features(media, batch_size=2).collect()}
+    assert spark.conf.get(key) == before
+    assert sorted(got) == [0, 1, 2, 3]
+    assert (got[0].format, got[0].img_w, got[0].img_h) == ("bmp", 4, 3)
+    assert (got[1].format, got[1].wav_frames) == ("wav", 4)
+    assert got[2].format is None and got[3].format is None
 
 
 def test_resize_images_real(spark):
@@ -179,9 +183,8 @@ def test_resize_images_batch_size_slicing(spark):
 
 def test_batch_size_validated_up_front(spark):
     """ADVICE r5: a non-positive batch_size must fail loudly on the
-    driver before any job launches — not silently disable the Arrow
-    batch cap (conf path) or die as an opaque range() error inside an
-    executor task (slice path)."""
+    driver before any job launches — not die as an opaque range()
+    error inside an executor task."""
     import pytest
 
     from cloud_dataflow_batch_processing_spark.extensions import multimodal as MM
@@ -199,5 +202,3 @@ def test_batch_size_validated_up_front(spark):
             MM.resample_audio(df, 8000, batch_size=bad)
         with pytest.raises(ValueError, match="batch_size"):
             MM.extract_exact_features(df.select("media_id", "content"), batch_size=bad)
-        with pytest.raises(ValueError, match="batch_size"):
-            MM.extract_exact_features_arrow(df.select("media_id", "content"), batch_size=bad)

@@ -53,8 +53,9 @@ def test_streaming_rollup_matches_batch_aggregate(spark, tmp_path):
 
 
 def test_rollup_sink_redelivery_idempotent(spark, tmp_path):
-    """A redelivered already-committed batch_id is a no-op — the store
-    after [b0, b1, b1 again] equals the store after [b0, b1]."""
+    """A redelivered already-committed batch_id recomputes from the same
+    baseline — the store after [b0, b1, b1 again] equals the store
+    after [b0, b1]."""
     store = str(tmp_path / "store")
     sink = incremental_rollup_sink(store, ["k"], ["v"])
     b0 = spark.createDataFrame(ROWS[:10], "k long, v double")
@@ -68,9 +69,9 @@ def test_rollup_sink_redelivery_idempotent(spark, tmp_path):
 
 
 def test_rollup_sink_crash_before_commit_recovers(spark, tmp_path):
-    """A version directory written WITHOUT its meta commit is invisible
-    (readers stay on the old version) and the batch's redelivery
-    completes the commit deterministically."""
+    """A version directory without its ``_SUCCESS`` commit marker is
+    invisible (readers stay on the old version) and the batch's
+    redelivery completes the commit deterministically."""
     store = str(tmp_path / "store")
     sink = incremental_rollup_sink(store, ["k"], ["v"])
     b0 = spark.createDataFrame(ROWS[:10], "k long, v double")
@@ -78,13 +79,13 @@ def test_rollup_sink_crash_before_commit_recovers(spark, tmp_path):
     sink(b0, 0)
     before = {tuple(r) for r in read_rollup(spark, store, ["k"], ["v"]).collect()}
 
-    # Simulate the crash: the batch-1 fold wrote its v=1 parquet but
-    # died before the meta commit — _meta.0 is still the latest. The
-    # orphan's CONTENT is garbage on purpose: redelivery must not read
-    # it (it recomputes from the predecessor and overwrites).
-    spark.createDataFrame([(99, 99.0)], "k long, v double").write.parquet(
-        os.path.join(store, "v=1")
-    )
+    # Simulate the crash: the batch-1 fold wrote its batch=1 parquet
+    # but died before the job commit — no _SUCCESS, so batch=0 is still
+    # the latest. The orphan's CONTENT is garbage on purpose: redelivery
+    # must not read it (it recomputes from the predecessor and overwrites).
+    orphan = os.path.join(store, "batch=1")
+    spark.createDataFrame([(99, 99.0)], "k long, v double").write.parquet(orphan)
+    os.remove(os.path.join(orphan, "_SUCCESS"))
 
     got = {tuple(r) for r in read_rollup(spark, store, ["k"], ["v"]).collect()}
     assert got == before  # uncommitted version invisible
@@ -102,10 +103,7 @@ def test_rollup_sink_prunes_old_versions(spark, tmp_path):
             spark.createDataFrame([(b % 3, float(b))], "k long, v double"),
             b,
         )
-    versions = sorted(e for e in os.listdir(store) if e.startswith("v="))
-    assert versions == ["v=3", "v=4"]  # latest + prev only
-    metas = sorted(e for e in os.listdir(store) if e.startswith("_meta."))
-    assert metas == ["_meta.4"]  # stale metas pruned with the versions
+    assert sorted(os.listdir(store)) == ["batch=3", "batch=4"]  # latest + prev only
     # And the kept chain still finalizes to the full history's totals.
     direct = spark.createDataFrame(
         [(b % 3, float(b)) for b in range(5)], "k long, v double"
@@ -131,7 +129,7 @@ def test_rollup_sink_rejects_fresh_checkpoint_batch_id_regression(spark, tmp_pat
 
 
 def test_rollup_sink_works_through_filesystem_uri(spark, tmp_path):
-    """The meta/prune bookkeeping goes through the Hadoop FileSystem of
+    """The commit/prune bookkeeping goes through the Hadoop FileSystem of
     the store URI (VERDICT r5/r6 #4) — a ``file://`` URI exercises the
     exact non-POSIX code path an s3a/gs/hdfs store would take, end to
     end with redelivery."""
@@ -141,12 +139,22 @@ def test_rollup_sink_works_through_filesystem_uri(spark, tmp_path):
     b1 = spark.createDataFrame(ROWS[10:], "k long, v double")
     sink(b0, 0)
     sink(b1, 1)
-    sink(b1, 1)  # redelivery no-op through the FS path too
+    sink(b1, 1)  # redelivery through the FS path too
     got = {tuple(r) for r in read_rollup(spark, store, ["k"], ["v"]).collect()}
     assert got == _expected(spark)
     local = str(tmp_path / "store_uri")
-    assert sorted(e for e in os.listdir(local) if e.startswith("v=")) == [
-        "v=0",
-        "v=1",
-    ]
-    assert [e for e in os.listdir(local) if e.startswith("_meta.")] == ["_meta.1"]
+    assert sorted(os.listdir(local)) == ["batch=0", "batch=1"]
+
+
+def test_rollup_sink_raises_without_commit_marker(spark, tmp_path):
+    """A version commits by Spark's ``_SUCCESS`` marker; a session that
+    turns the marker off would leave every version invisible, so the
+    write fails loudly instead."""
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    sink = incremental_rollup_sink(str(tmp_path / "store"), ["k"], ["v"])
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(OSError, match="_SUCCESS"):
+            sink(spark.createDataFrame(ROWS[:10], "k long, v double"), 0)
+    finally:
+        spark.conf.unset(key)

@@ -481,7 +481,7 @@ def test_discarding_sink_state_is_executor_side(spark, tmp_path):
     for b in range(4):
         sink(batch([(1, b + 1), (2, 10 * (b + 1))]), b)
     versions = sorted(p.name for p in (tmp_path / "st").iterdir())
-    assert versions == ["v2", "v3"], versions
+    assert versions == ["batch=2", "batch=3"], versions
     assert sink.state_size() == 2  # two keys resident, read from parquet
 
 
@@ -518,3 +518,74 @@ def test_discarding_sink_state_survives_process_restart(spark, tmp_path):
     out2.clear()
     sink2(batch([(1, 40)]), 2)
     assert out2 == [(1, 15)]
+
+
+def test_discarding_sink_rejects_batch_id_regression(spark, tmp_path):
+    """A batch_id below the store's latest committed version means a
+    fresh checkpoint restarted the ids against an existing state_dir:
+    re-baselining at 0 would emit full values as deltas — hard error,
+    and the committed baseline is untouched."""
+    from cloud_dataflow_batch_processing_spark.streaming.triggers import (
+        discarding_early_sink,
+    )
+
+    out: list[tuple] = []
+    sink = discarding_early_sink(
+        lambda df, _id: out.extend((r.k, r.n) for r in df.collect()),
+        ["k"], ["n"], state_dir=str(tmp_path / "st"),
+    )
+    batch = lambda rows: spark.createDataFrame(rows, "k long, n long")
+    sink(batch([(1, 10)]), 0)
+    sink(batch([(1, 25)]), 1)
+    with pytest.raises(ValueError, match="checkpoint lineage"):
+        sink(batch([(1, 30)]), 0)
+    assert sorted(out) == [(1, 10), (1, 15)]
+    sink(batch([(1, 40)]), 2)
+    assert out[-1] == (1, 15)  # 40 - 25: the batch-1 baseline survived
+
+
+def test_discarding_sink_rejects_negative_lateness():
+    """The watermark needs no store of its own only because the row
+    holding the running max is never evicted, which holds for
+    lateness >= 0 — a negative lateness is refused up front."""
+    import datetime
+
+    from cloud_dataflow_batch_processing_spark.streaming.triggers import (
+        discarding_early_sink,
+    )
+
+    for bad in (-1, -0.5, datetime.timedelta(seconds=-1)):
+        with pytest.raises(ValueError, match="evict_lateness"):
+            discarding_early_sink(
+                lambda df, _id: None, ["w", "k"], ["n"],
+                evict_col="w", evict_lateness=bad,
+            )
+
+
+def test_discarding_sink_works_through_filesystem_uri(spark, tmp_path):
+    """The state store's listing, commit check and prune go through the
+    Hadoop FileSystem of a ``file://`` URI — the code path an
+    s3a/gs/hdfs state_dir takes — with eviction and redelivery."""
+    import os
+
+    from cloud_dataflow_batch_processing_spark.streaming.triggers import (
+        discarding_early_sink,
+    )
+
+    seen: list[tuple] = []
+    sink = discarding_early_sink(
+        lambda df, _id: seen.extend((r.w, r.k, r.n) for r in df.collect()),
+        ["w", "k"], ["n"], evict_col="w", evict_lateness=0,
+        state_dir=f"file://{tmp_path}/st_uri",
+    )
+    batch = lambda rows: spark.createDataFrame(rows, "w long, k long, n long")
+    sink(batch([(0, 1, 3)]), 0)
+    sink(batch([(1, 2, 1), (0, 1, 7)]), 1)
+    sink(batch([(1, 2, 1), (0, 1, 7)]), 1)  # redelivery
+    sink(batch([(1, 2, 4)]), 2)
+    # batch 1 twice with identical deltas; batch 2 against window 1's 1
+    assert sorted(seen) == sorted(
+        [(0, 1, 3), (1, 2, 1), (0, 1, 4), (1, 2, 1), (0, 1, 4), (1, 2, 3)]
+    )
+    assert sorted(os.listdir(tmp_path / "st_uri")) == ["batch=1", "batch=2"]
+    assert sink.state_size() == 1  # window 0 evicted, window 1 resident
