@@ -116,12 +116,6 @@ def minhash_from_shingles(sh: Column, num_hashes: int = NUM_HASHES) -> list[Colu
     ]
 
 
-def minhash_signature(col: str, num_hashes: int = NUM_HASHES) -> list[Column]:
-    """Single-expression MinHash lanes (each lane re-embeds the shingle
-    tree — fine for a few lanes; use the staged form for all 16)."""
-    return minhash_from_shingles(shingle_hashes(col), num_hashes)
-
-
 def band_hash(sig_cols: list[Column | str], band: int) -> Column:
     """Fold one band's signature rows into a single bucket key."""
     vals = [

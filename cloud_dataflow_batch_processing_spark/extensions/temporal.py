@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(
@@ -163,117 +163,6 @@ def range_join(
     keep_p = [p[c] for c in points.columns]
     keep_iv = [iv[c] for c in iv_cols]
     return joined.select(*keep_p, *keep_iv)
-
-
-def asof_join_chunked(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    right_cols: Sequence[str],
-    chunk: int,
-    *,
-    inclusive: bool = True,
-) -> DataFrame:
-    """:func:`asof_join` with a bounded per-task window — the monster-key
-    treatment. ``asof_join`` puts an entire key's timeline through one
-    task's sort+window; with a handful of dominant keys at 100 TB that
-    is a straggler (the same shape `pack_sequences` had per-source,
-    fixed per-shard). Here the timeline is cut into ``chunk``-wide time
-    slices and the window partitions by (key, chunk):
-
-    1. Per (key, chunk), reduce the right side to its latest row — a
-       chunk-level summary frame ~|chunks| rows, not |rows|.
-    2. Forward-fill that summary per key over chunk order EXCLUDING the
-       current chunk (``rowsBetween(unboundedPreceding, -1)``): the
-       *seed* each chunk inherits from the past. This window runs on
-       the tiny summary frame.
-    3. Inject each seed as a pseudo-right row (side -1, its original
-       timestamp — strictly before every in-chunk row since it comes
-       from an earlier chunk) and forward-fill per (key, chunk).
-
-    Equal timestamps always share a chunk (``DIV`` is deterministic),
-    so inclusive/exclusive tie semantics are preserved exactly; a
-    property test asserts row-for-row equality with ``asof_join``.
-    Timestamps must be non-negative integer epochs.
-    """
-    on = list(on)
-    w = int(chunk)
-    # Same NULL-key join semantics as asof_join.
-    for k in on:
-        right = right.filter(F.col(k).isNotNull())
-    right_tag, left_tag = (0, 1) if inclusive else (1, 0)
-    right_payload = list(right_cols)
-    left_only = [c for c in left.columns if c not in on and c != left_ts]
-
-    # 1. chunk-level latest-right summary: max of (ts, payload...) struct
-    # is deterministic even under ts ties (lexicographic tiebreak).
-    pay = F.struct(F.col(right_ts).alias("__t"), *[F.col(c) for c in right_payload])
-    per_chunk = right.groupBy(
-        *on, F.expr(f"{right_ts} DIV {w}").alias("__chunk")
-    ).agg(F.max(pay).alias("__p"))
-
-    # 2. seeds: last summary over strictly-earlier chunks, evaluated on
-    # the union of chunks either side touches.
-    l_chunks = left.select(*on, F.expr(f"{left_ts} DIV {w}").alias("__chunk")).distinct()
-    all_chunks = l_chunks.unionByName(per_chunk.select(*on, "__chunk")).distinct()
-    wprev = (
-        Window.partitionBy(*on).orderBy("__chunk").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seeds = (
-        all_chunks.join(per_chunk, [*on, "__chunk"], "left")
-        .select(*on, "__chunk", F.last("__p", ignorenulls=True).over(wprev).alias("__s"))
-        .filter(F.col("__s").isNotNull())
-    )
-
-    # 3. three-way union tagged frame, filled per (key, chunk).
-    seed_rows = seeds.select(
-        *on,
-        "__chunk",
-        F.col("__s.__t").alias("__t"),
-        F.lit(-1).alias("__side"),
-        F.col("__s.__t").alias("__r_ts"),
-        *[F.col(f"__s.{c}").alias(c) for c in right_payload],
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_only],
-    )
-    r_rows = right.select(
-        *on,
-        F.expr(f"{right_ts} DIV {w}").alias("__chunk"),
-        F.col(right_ts).alias("__t"),
-        F.lit(right_tag).alias("__side"),
-        F.col(right_ts).alias("__r_ts"),
-        *[F.col(c) for c in right_payload],
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_only],
-    )
-    l_rows = left.select(
-        *on,
-        F.expr(f"{left_ts} DIV {w}").alias("__chunk"),
-        F.col(left_ts).alias("__t"),
-        F.lit(left_tag).alias("__side"),
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("__r_ts"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in right_payload],
-        *[F.col(c) for c in left_only],
-    )
-    u = seed_rows.unionByName(r_rows).unionByName(l_rows)
-    wfill = (
-        Window.partitionBy(*on, "__chunk")
-        .orderBy("__t", "__side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
-        "*",
-        *[F.last(c, ignorenulls=True).over(wfill).alias(f"__m_{c}") for c in right_payload],
-        F.last("__r_ts", ignorenulls=True).over(wfill).alias("__m_ts"),
-    )
-    matched = filled.filter(F.col("__side") == left_tag)
-    return matched.select(
-        *on,
-        F.col("__t").alias(left_ts),
-        *[F.col(c) for c in left_only],
-        *[F.col(f"__m_{c}").alias(c) for c in right_payload],
-        F.col("__m_ts").alias("__asof_ts"),
-    )
 
 
 def resample_ffill(

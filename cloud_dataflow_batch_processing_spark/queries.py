@@ -63,7 +63,9 @@ def register(
 
 # DRIVER_WINDOW rotation (round 13), produced mechanically by
 # `scripts/rotate_window.py --write <names>`: the named queries lead —
-# the three whose code paths the batch-keyed store change touched
+# datastore_mutations_agg, whose entity warehouse now versions,
+# commits and prunes through streaming/batch_store.py, then the three
+# whose code paths the batch-keyed store change touched
 # (streaming_lsh_dedup, whose signature store and survivor sink now run
 # through streaming/batch_store.py; multimodal_decode_features, whose
 # feature extraction no longer rewrites the session's Arrow batch size;
@@ -76,12 +78,13 @@ def register(
 # pipeline (substring_dedup_clean, substring_dedup_incremental,
 # decontaminate_exact_spans), dedup_near_exact_keep, the grouped
 # per-bucket cosine kernel (semantic_dedup_prune, ann_lsh_pairs,
-# dedup_embedding_cosine) and datastore_mutations_agg, whose parity test
-# sits in the slowsweep tier (VERDICT r12 #2). The rest is
+# dedup_embedding_cosine). datastore_mutations_agg's parity test sits
+# in the slowsweep tier (VERDICT r12 #2). The rest is
 # least-recently-certified, ties alphabetical. Overlap with
 # CORRECTNESS_r12.json is 5 <= 25, so the rotation gate
 # (tests/test_window_rotation.py) is green.
 DRIVER_WINDOW: tuple[str, ...] = (
+    "datastore_mutations_agg",
     "streaming_lsh_dedup",
     "multimodal_decode_features",
     "avro_roundtrip_agg",
@@ -97,7 +100,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "semantic_dedup_prune",
     "ann_lsh_pairs",
     "dedup_embedding_cosine",
-    "datastore_mutations_agg",
     "boilerplate_ngrams",
     "corpus_audit_report",
     "corpus_mix_temperature",

@@ -11,7 +11,9 @@ Spark-first design: when the spark-bigquery connector is on the
 classpath we use ``format("bigquery")``; otherwise (tests, local dev,
 this container) the same API reads/writes a parquet "warehouse"
 directory with table-name subdirs, so pipelines are testable without
-GCP. The disposition pair maps onto Spark SaveModes:
+GCP. The warehouse may be any path Spark writes (``file:``, ``hdfs:``,
+``gs:``): its listing and existence checks go through the path's
+Hadoop FileSystem. The disposition pair maps onto Spark SaveModes:
 
   WRITE_TRUNCATE → overwrite      (reference :268-270)
   WRITE_APPEND   → append         (reference :264-267)
@@ -24,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cloud_dataflow_batch_processing_spark.caching import hadoop_path
 
 
 class CreateDisposition:
@@ -93,12 +97,13 @@ def read_table(
     if table:
         return spark.read.parquet(_local_table_path(warehouse, table))
     # query mode: register every table in the warehouse as a view
-    for dataset in os.listdir(warehouse):
-        dpath = os.path.join(warehouse, dataset)
-        if not os.path.isdir(dpath):
+    fs, root = hadoop_path(spark, warehouse)
+    for dataset in fs.listStatus(root):
+        if not dataset.isDirectory():
             continue
-        for t in os.listdir(dpath):
-            spark.read.parquet(os.path.join(dpath, t)).createOrReplaceTempView(t)
+        for t in fs.listStatus(dataset.getPath()):
+            p = t.getPath()
+            spark.read.parquet(p.toString()).createOrReplaceTempView(p.getName())
     return spark.sql(query)
 
 
@@ -135,11 +140,13 @@ def write_table(
         return spark.read.format("bigquery").option("table", table).load()
     warehouse = warehouse or os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/bq_warehouse")
     path = _local_table_path(warehouse, table)
-    if create_disposition == CreateDisposition.CREATE_NEVER and not os.path.isdir(path):
-        raise RuntimeError(
-            f"table {table} does not exist and create_disposition=CREATE_NEVER "
-            "(reference beam/io/gcp/bigquery.py:255-263)"
-        )
+    if create_disposition == CreateDisposition.CREATE_NEVER:
+        fs, p = hadoop_path(spark, path)
+        if not fs.exists(p):
+            raise RuntimeError(
+                f"table {table} does not exist and create_disposition=CREATE_NEVER "
+                "(reference beam/io/gcp/bigquery.py:255-263)"
+            )
     (
         df.write.mode(mode)
         .option("compression", "zstd")

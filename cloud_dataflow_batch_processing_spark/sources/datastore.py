@@ -17,10 +17,15 @@ Spark-first design:
   the same API onto the client (contract-pinned here, executable only
   with GCP credentials — not in this container). Otherwise a local
   entity warehouse executes the full semantics so pipelines are
-  testable offline: ``warehouse/<project>/<namespace>/<kind>`` holds
-  VERSIONED parquet snapshots (``v=N`` subdirs + newest-wins), and a
-  mutation batch = read latest snapshot → merge distributed → write
-  ``v=N+1``. Nothing ever collects to the driver; upsert is a
+  testable offline: ``warehouse/<project>/<namespace>/<kind>`` is a
+  ``streaming/batch_store.py`` snapshot store — version ``N`` is the
+  parquet directory ``batch=<N>/``, committed by its ``_SUCCESS``,
+  newest committed wins — and a mutation batch = read the latest
+  snapshot → merge distributed → write ``batch=<N+1>`` → prune to
+  ``{N, N+1}``, so a frame read before the mutation still collects.
+  Listing, commit check and prune go through the warehouse's Hadoop
+  FileSystem, so a ``file:``/``hdfs:``/``gs:`` warehouse works too.
+  Nothing ever collects to the driver; upsert is a
   null-safe anti-join + union, delete an anti-join — both shuffle on
   the key exactly once, the minimum for key-matched mutation at any
   scale. Re-running an identical mutation batch yields an identical
@@ -42,10 +47,11 @@ with a schema IS that map, typed.
 from __future__ import annotations
 
 import os
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from cloud_dataflow_batch_processing_spark.streaming import batch_store
 
 KEY_COL = "__key__"
 _DEFAULT_NS = "__default__"
@@ -85,24 +91,20 @@ def _kind_dir(warehouse: str, project: str, namespace: str | None, kind: str) ->
     return os.path.join(warehouse, project, namespace or _DEFAULT_NS, kind)
 
 
-def _versions(kind_dir: str) -> list[int]:
-    if not os.path.isdir(kind_dir):
-        return []
-    out = []
-    for name in os.listdir(kind_dir):
-        m = re.fullmatch(r"v=(\d+)", name)
-        if m and os.path.exists(os.path.join(kind_dir, name, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 def _latest_snapshot(
     spark: SparkSession, kind_dir: str
 ) -> tuple[DataFrame | None, int]:
-    vs = _versions(kind_dir)
-    if not vs:
+    latest = batch_store.committed(spark, kind_dir)[-1:]
+    if not latest:
         return None, -1
-    return spark.read.parquet(os.path.join(kind_dir, f"v={vs[-1]}")), vs[-1]
+    return batch_store.read(spark, kind_dir, latest), latest[0]
+
+
+def _commit(df: DataFrame, kind_dir: str, ver: int) -> int:
+    """Write snapshot ``ver + 1`` and keep only it and ``ver``."""
+    batch_store.write(df, kind_dir, ver + 1)
+    batch_store.prune(df.sparkSession, kind_dir, [ver, ver + 1])
+    return ver + 1
 
 
 def read_entities(
@@ -189,8 +191,7 @@ def write_entities(
         merged = keep.unionByName(df, allowMissingColumns=True)
     else:
         merged = df
-    merged.write.mode("overwrite").parquet(os.path.join(kind_dir, f"v={ver + 1}"))
-    return ver + 1
+    return _commit(merged, kind_dir, ver)
 
 
 def delete_entities(
@@ -215,8 +216,7 @@ def delete_entities(
     if current is None:
         raise FileNotFoundError(f"kind {kind!r} has no entities under {kind_dir}")
     remaining = current.join(keys.select(KEY_COL), KEY_COL, "left_anti")
-    remaining.write.mode("overwrite").parquet(os.path.join(kind_dir, f"v={ver + 1}"))
-    return ver + 1
+    return _commit(remaining, kind_dir, ver)
 
 
 __all__ = [

@@ -6,7 +6,11 @@ with its ``batch_id`` and delivers it at least once, so a sink that
 keeps state across batches owns its durability. The rollup store
 (``rollup_sink``), the discarding-pane baseline
 (``triggers.discarding_early_sink``) and the LSH signature store and
-survivor sink (``lsh_dedup``) all keep it by one rule:
+survivor sink (``lsh_dedup``) all keep it by one rule. A fourth user,
+the local Datastore entity warehouse (``sources/datastore.py``), is a
+snapshot store keyed by mutation count instead of ``batch_id``: it
+uses the layout, the commit, :func:`read` and the prune, not
+:func:`begin`.
 
 - Layout: version ``b`` is the parquet directory ``<root>/batch=<b>/``.
 - Commit: a version is committed iff it holds ``_SUCCESS``, the marker

@@ -39,6 +39,12 @@ module provides is the *useful subset*, built from Spark primitives:
   count m) fires one closing pane, after which the trigger is
   finished and later elements never fire again.
 
+The five count/time triggers share one per-key pane fold,
+:func:`fold_panes` over :class:`PaneState` (Beam runs every trigger
+through one driver over per-key state and timers, trigger.py:1146
+``GeneralTriggerDriver``): each public function passes only its firing
+rule and its output columns.
+
 Late firings (``late=``) are unreachable with allowed_lateness
 hardcoded to 0 in the reference (beam/transforms/core.py:1571), so
 they are deliberately out of scope.
@@ -58,12 +64,15 @@ for a poisoned pane, never a plausible wrong number. Inf survives
 from __future__ import annotations
 
 import tempfile
+import time
 from collections.abc import Callable, Iterable
+from dataclasses import astuple, dataclass
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cloud_dataflow_batch_processing_spark.streaming import batch_store
 from cloud_dataflow_batch_processing_spark.streaming.state import stateful_transform
@@ -277,6 +286,102 @@ def discarding_early_sink(
     return wrapped
 
 
+@dataclass
+class PaneState:
+    """One key's trigger state, in state-schema order: the open pane's
+    count and sum, the key's lifetime count and sum, panes fired, the
+    executor clock (ms) at the open pane's first element (0: no open
+    pane; -1: a timeout satisfied its time leg) and whether a "finally"
+    pane closed the key."""
+
+    pending: int = 0
+    pane_total: float = 0.0
+    count_all: int = 0
+    total: float = 0.0
+    panes: int = 0
+    pane_start: int = 0
+    finished: bool = False
+
+
+def fold_panes(
+    key: tuple,
+    pdfs: Iterable[pd.DataFrame],
+    state: GroupState,
+    value_col: str,
+    rule: Callable[[PaneState, int], str | None],
+    processing_time_ms: int | None = None,
+    accumulating: bool = True,
+    cycle: int = 1,
+    clock: Callable[[], float] = time.time,
+):
+    """The per-key update of every count/time trigger: fold the key's
+    elements into its pane and, after each one, fire a pane when
+    ``rule(state, now_ms)`` names a cause. A fired pane is the row
+    (key, pane, cause, sub_trigger, n_elements, total): ``sub_trigger``
+    is the pane's place in a ``cycle`` of sub-triggers, and the pane
+    carries the lifetime (count, sum) when ``accumulating``, else its
+    own. Cause "finally" closes the key for good.
+
+    A timeout means the time leg is satisfied, whatever the executor
+    clock reads (Spark's timeout clock runs ahead of it): it sets
+    ``pane_start`` to -1 and asks ``rule`` once. The timeout is armed
+    from the open pane's FIRST element (AfterProcessingTime semantics),
+    so a trickle of later elements does not push the deadline back."""
+    s = PaneState(*state.get) if state.exists else PaneState()
+    now = int(clock() * 1000)
+    rows = []
+
+    def fire(cause: str) -> None:
+        n_el, tot = (s.count_all, s.total) if accumulating else (s.pending, s.pane_total)
+        rows.append((key[0], s.panes + 1, cause, s.panes % cycle, n_el, tot))
+        s.panes += 1
+        s.pending, s.pane_total, s.pane_start = 0, 0.0, 0
+        s.finished = cause == "finally"
+
+    if state.hasTimedOut and s.pending:
+        s.pane_start = -1
+        if cause := rule(s, now):
+            fire(cause)
+    for pdf in pdfs:
+        for v in pdf[value_col]:
+            if s.finished:
+                break
+            if s.pending == 0:
+                s.pane_start = now
+            s.pending += 1
+            s.count_all += 1
+            s.pane_total += float(v)
+            s.total += float(v)
+            if cause := rule(s, now):
+                fire(cause)
+    state.update(astuple(s))
+    if processing_time_ms is not None and s.pending and s.pane_start > 0:
+        state.setTimeoutDuration(max(1, s.pane_start + processing_time_ms - now))
+    if rows:
+        yield pd.DataFrame(rows, columns=["key", "pane", "cause", "sub_trigger", "n_elements", "total"])
+
+
+def _panes(df, key_col, value_col, cols, rule, processing_time_ms=None, **fold_args):
+    """The fired panes of ``df`` under ``rule``, one row each, as ``cols``."""
+    fold = partial(
+        fold_panes, value_col=value_col, rule=rule, processing_time_ms=processing_time_ms,
+        **fold_args,
+    )
+    return stateful_transform(
+        df,
+        [key_col],
+        fold,
+        state_schema="pending long, pane_total double, count_all long, total double, "
+        "panes long, pane_start long, finished boolean",
+        output_schema="key long, pane long, cause string, sub_trigger int, "
+        "n_elements long, total double",
+        output_mode="append",
+        timeout=GroupStateTimeout.NoTimeout
+        if processing_time_ms is None
+        else GroupStateTimeout.ProcessingTimeTimeout,
+    ).select(*cols)
+
+
 def fire_after_count(
     df: DataFrame,
     key_col: str,
@@ -296,36 +401,10 @@ def fire_after_count(
     """
     if accumulation_mode not in ("accumulating", "discarding"):
         raise ValueError(f"unknown accumulation_mode {accumulation_mode!r}")
-    discarding = accumulation_mode == "discarding"
-
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        buffered, total, panes = state.get if state.exists else (0, 0.0, 0)
-        rows = {"key": [], "pane": [], "n_elements": [], "total": []}
-        for pdf in pdfs:
-            for v in pdf[value_col]:
-                buffered += 1
-                total += float(v)
-                # In discarding mode `buffered` resets per pane, so both
-                # modes fire on the same condition.
-                if buffered % n == 0:
-                    panes += 1
-                    rows["key"].append(key[0])
-                    rows["pane"].append(panes)
-                    rows["n_elements"].append(buffered)
-                    rows["total"].append(total)
-                    if discarding:
-                        buffered, total = 0, 0.0
-        state.update((buffered, total, panes))
-        if rows["key"]:
-            yield pd.DataFrame(rows)
-
-    return stateful_transform(
-        df,
-        [key_col],
-        update,
-        state_schema="buffered long, total double, panes long",
-        output_schema="key long, pane long, n_elements long, total double",
-        output_mode="append",
+    return _panes(
+        df, key_col, value_col, ["key", "pane", "n_elements", "total"],
+        lambda s, now: "count" if s.pending >= n else None,
+        accumulating=accumulation_mode == "accumulating",
     )
 
 
@@ -358,61 +437,10 @@ def fire_after_any(
     GroupState exposes no batch-stable clock to do better
     (getCurrentProcessingTimeMs is JVM-only).
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        rows = {"key": [], "pane": [], "cause": [], "n_elements": [], "total": []}
-
-        def fire(cause: str, panes: int, count_all: int, total: float) -> None:
-            rows["key"].append(key[0])
-            rows["pane"].append(panes)
-            rows["cause"].append(cause)
-            rows["n_elements"].append(count_all)
-            rows["total"].append(total)
-
-        import time as _time
-
-        if state.hasTimedOut:
-            pending, total, count_all, panes, _pane_start = state.get
-            if pending > 0:
-                panes += 1
-                fire("time", panes, count_all, total)
-            state.update((0, total, count_all, panes, 0))
-            # No new timer until the next element starts a new pane.
-        else:
-            pending, total, count_all, panes, pane_start = (
-                state.get if state.exists else (0, 0.0, 0, 0, 0)
-            )
-            for pdf in pdfs:
-                for v in pdf[value_col]:
-                    if pending == 0:
-                        pane_start = int(_time.time() * 1000)
-                    pending += 1
-                    count_all += 1
-                    total += float(v)
-                    if pending >= n:
-                        panes += 1
-                        fire("count", panes, count_all, total)
-                        pending = 0
-                        pane_start = 0
-            state.update((pending, total, count_all, panes, pane_start))
-            if pending > 0:
-                # Arm the time leg relative to the pane's FIRST element
-                # (AfterProcessingTime semantics) — a trickle of later
-                # elements must not push the deadline back.
-                remaining = pane_start + processing_time_ms - int(_time.time() * 1000)
-                state.setTimeoutDuration(max(1, remaining))
-        if rows["key"]:
-            yield pd.DataFrame(rows)
-
-    return stateful_transform(
-        df,
-        [key_col],
-        update,
-        state_schema="pending long, total double, count_all long, panes long, pane_start long",
-        output_schema="key long, pane long, cause string, n_elements long, total double",
-        output_mode="append",
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
+    return _panes(
+        df, key_col, value_col, ["key", "pane", "cause", "n_elements", "total"],
+        lambda s, now: "count" if s.pending >= n else "time" if s.pane_start == -1 else None,
+        processing_time_ms,
     )
 
 
@@ -435,62 +463,13 @@ def fire_after_all(
     (see its docstring) — "at least d elapsed" is a lower bound, not a
     deadline, matching Beam's AfterProcessingTime contract.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        import time as _time
+    def rule(s: PaneState, now: int) -> str | None:
+        time_ok = s.pane_start == -1 or now >= s.pane_start + processing_time_ms
+        return "all" if s.pending >= n and time_ok else None
 
-        rows = {"key": [], "pane": [], "n_elements": [], "total": []}
-
-        def fire(panes: int, count_all: int, total: float) -> None:
-            rows["key"].append(key[0])
-            rows["pane"].append(panes)
-            rows["n_elements"].append(count_all)
-            rows["total"].append(total)
-
-        now_ms = int(_time.time() * 1000)
-        if state.hasTimedOut:
-            pending, total, count_all, panes, pane_start = state.get
-            if pending >= n:  # count leg already satisfied → fire now
-                panes += 1
-                fire(panes, count_all, total)
-                pending, pane_start = 0, 0
-            elif pending > 0:
-                # Time leg satisfied first; record it by zeroing
-                # pane_start — the count leg will fire inline later.
-                pane_start = -1
-            state.update((pending, total, count_all, panes, pane_start))
-        else:
-            pending, total, count_all, panes, pane_start = (
-                state.get if state.exists else (0, 0.0, 0, 0, 0)
-            )
-            for pdf in pdfs:
-                for v in pdf[value_col]:
-                    if pending == 0:
-                        pane_start = now_ms
-                    pending += 1
-                    count_all += 1
-                    total += float(v)
-                    time_ok = pane_start == -1 or now_ms >= pane_start + processing_time_ms
-                    if pending >= n and time_ok:
-                        panes += 1
-                        fire(panes, count_all, total)
-                        pending, pane_start = 0, 0
-            state.update((pending, total, count_all, panes, pane_start))
-            if pending > 0 and pane_start > 0:
-                remaining = pane_start + processing_time_ms - now_ms
-                state.setTimeoutDuration(max(1, remaining))
-        if rows["key"]:
-            yield pd.DataFrame(rows)
-
-    return stateful_transform(
-        df,
-        [key_col],
-        update,
-        state_schema="pending long, total double, count_all long, panes long, pane_start long",
-        output_schema="key long, pane long, n_elements long, total double",
-        output_mode="append",
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
+    return _panes(
+        df, key_col, value_col, ["key", "pane", "n_elements", "total"], rule, processing_time_ms
     )
 
 
@@ -506,37 +485,10 @@ def fire_after_each_counts(
     elements, pane 2 after n2 more, ... Output:
     (key, pane, sub_trigger, n_elements, total).
     """
-
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        pending, total, count_all, panes = (
-            state.get if state.exists else (0, 0.0, 0, 0)
-        )
-        rows = {"key": [], "pane": [], "sub_trigger": [], "n_elements": [], "total": []}
-        for pdf in pdfs:
-            for v in pdf[value_col]:
-                pending += 1
-                count_all += 1
-                total += float(v)
-                sub = panes % len(counts)
-                if pending >= counts[sub]:
-                    panes += 1
-                    rows["key"].append(key[0])
-                    rows["pane"].append(panes)
-                    rows["sub_trigger"].append(sub)
-                    rows["n_elements"].append(count_all)
-                    rows["total"].append(total)
-                    pending = 0
-        state.update((pending, total, count_all, panes))
-        if rows["key"]:
-            yield pd.DataFrame(rows)
-
-    return stateful_transform(
-        df,
-        [key_col],
-        update,
-        state_schema="pending long, total double, count_all long, panes long",
-        output_schema="key long, pane long, sub_trigger int, n_elements long, total double",
-        output_mode="append",
+    return _panes(
+        df, key_col, value_col, ["key", "pane", "sub_trigger", "n_elements", "total"],
+        lambda s, now: "count" if s.pending >= counts[s.panes % len(counts)] else None,
+        cycle=len(counts),
     )
 
 
@@ -555,44 +507,9 @@ def fire_or_finally(
     Output: (key, pane, cause, n_elements, total).
     """
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        pending, total, count_all, panes, finished = (
-            state.get if state.exists else (0, 0.0, 0, 0, False)
-        )
-        rows = {"key": [], "pane": [], "cause": [], "n_elements": [], "total": []}
+    def rule(s: PaneState, now: int) -> str | None:
+        if s.count_all >= final_count:
+            return "finally"
+        return "count" if s.pending >= n else None
 
-        def fire(cause: str) -> None:
-            rows["key"].append(key[0])
-            rows["pane"].append(panes)
-            rows["cause"].append(cause)
-            rows["n_elements"].append(count_all)
-            rows["total"].append(total)
-
-        for pdf in pdfs:
-            for v in pdf[value_col]:
-                if finished:
-                    continue
-                pending += 1
-                count_all += 1
-                total += float(v)
-                if count_all >= final_count:
-                    panes += 1
-                    fire("finally")
-                    finished = True
-                    pending = 0
-                elif pending >= n:
-                    panes += 1
-                    fire("count")
-                    pending = 0
-        state.update((pending, total, count_all, panes, finished))
-        if rows["key"]:
-            yield pd.DataFrame(rows)
-
-    return stateful_transform(
-        df,
-        [key_col],
-        update,
-        state_schema="pending long, total double, count_all long, panes long, finished boolean",
-        output_schema="key long, pane long, cause string, n_elements long, total double",
-        output_mode="append",
-    )
+    return _panes(df, key_col, value_col, ["key", "pane", "cause", "n_elements", "total"], rule)

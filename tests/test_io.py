@@ -165,6 +165,31 @@ def test_bigquery_local_fallback_roundtrip(spark, tmp_path):
     assert got == 2
 
 
+def test_bigquery_create_never_through_filesystem_uri(spark, tmp_path):
+    """CREATE_NEVER onto an existing table of a ``file://`` warehouse:
+    the existence check goes through the path's Hadoop FileSystem."""
+    wh = f"file://{tmp_path}/wh"
+    df = create(spark, [(1, "a"), (2, "b")], schema=["id", "s"])
+    write_table(df, "ds.t", write_disposition=WriteDisposition.WRITE_TRUNCATE, warehouse=wh)
+    never = dict(create_disposition=CreateDisposition.CREATE_NEVER, warehouse=wh)
+    landed = write_table(df, "ds.t", write_disposition=WriteDisposition.WRITE_APPEND, **never)
+    assert landed.count() == 4
+    with pytest.raises(RuntimeError, match="does not exist"):
+        write_table(df, "ds.missing", write_disposition=WriteDisposition.WRITE_TRUNCATE, **never)
+
+
+def test_bigquery_query_mode_through_filesystem_uri(spark, tmp_path):
+    """Query mode over a ``file://`` warehouse lists its tables through
+    the path's Hadoop FileSystem."""
+    wh = f"file://{tmp_path}/wh"
+    for table, rows in (("ds.a", [(1,), (2,)]), ("ds2.b", [(3,)])):
+        write_table(create(spark, rows, schema=["id"]), table, warehouse=wh)
+    got = read_table(
+        spark, query="SELECT (SELECT SUM(id) FROM a) + (SELECT SUM(id) FROM b) AS n", warehouse=wh
+    ).head().n
+    assert got == 6
+
+
 def test_class_on_classpath_lookup(spark):
     from cloud_dataflow_batch_processing_spark.sources.bigquery import _class_on_classpath
 

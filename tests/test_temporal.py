@@ -127,58 +127,6 @@ def test_range_join_no_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-@pytest.mark.slowsweep
-def test_asof_chunked_equals_plain(spark):
-    """Property: the bounded-window variant is row-for-row identical to
-    asof_join for every chunk width and both tie semantics."""
-    from cloud_dataflow_batch_processing_spark.extensions.temporal import asof_join_chunked
-
-    left = spark.createDataFrame(
-        [(x % 5, x % 997, i) for i, x in enumerate(
-            (s * 48271 % 2147483647 for s in range(1, 400)))],
-        ["k", "lt", "lid"],
-    )
-    # unique (k, rt): dedupe by construction
-    right = spark.createDataFrame(
-        list({(x % 5, (x // 7) % 997): None for x in
-              (s * 16807 % 2147483647 for s in range(1, 250))}.keys()),
-        ["k", "rt"],
-    ).withColumn("v", (F.col("rt") * 3 + F.col("k")).cast("double"))
-
-    for inclusive in (True, False):
-        base = asof_join(
-            left, right, on=["k"], left_ts="lt", right_ts="rt",
-            right_cols=["v"], inclusive=inclusive,
-        )
-        want = sorted(map(tuple, base.collect()))
-        for chunk in (13, 100, 10_000):  # smaller / comparable / larger than the ts range
-            got = asof_join_chunked(
-                left, right, on=["k"], left_ts="lt", right_ts="rt",
-                right_cols=["v"], chunk=chunk, inclusive=inclusive,
-            )
-            assert sorted(map(tuple, got.collect())) == want, (inclusive, chunk)
-
-
-def test_asof_chunked_bounds_partitions(spark):
-    """The fill window must partition by (key, chunk), not key alone —
-    a single dominant key's timeline spreads across chunk tasks."""
-    from cloud_dataflow_batch_processing_spark.extensions.temporal import asof_join_chunked
-
-    left = spark.createDataFrame([(1, t, t) for t in range(0, 1000, 7)], ["k", "lt", "lid"])
-    right = spark.createDataFrame([(1, t) for t in range(0, 1000, 11)], ["k", "rt"]).withColumn(
-        "v", F.col("rt").cast("double")
-    )
-    out = asof_join_chunked(
-        left, right, on=["k"], left_ts="lt", right_ts="rt", right_cols=["v"], chunk=100
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    win_specs = re.findall(r"Window .*?windowspecdefinition\(([^)]*)\)", plan)
-    fill_specs = [s for s in win_specs if "__chunk" in s and "__t" in s]
-    assert fill_specs, win_specs  # the fill window partitions by (k, __chunk)
-
-
 def test_asof_null_keys_never_match(spark):
     """JOIN semantics: NULL keys match nothing — NULL-key left rows
     keep NULL payloads even when NULL-key right rows exist."""
